@@ -1,31 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
-
-/** SPARK_GRAFT_CONF="key=value;key=value" overlay for session-level
-  * tuning experiments — the r20 optimization round's A/B harness.
-  * Applied by the measurement mains (Bench, ProfiledQuery) AFTER their
-  * pinned configs so an experiment can override any of them; unset, a
-  * no-op. */
-object ExtraConf {
-  implicit final class BuilderOps(val b: SparkSession.Builder) extends AnyVal {
-    def applyExtraConf(): SparkSession.Builder = {
-      sys.env.get("SPARK_GRAFT_CONF").toSeq
-        .flatMap(_.split(";").toSeq).map(_.trim).filter(_.nonEmpty)
-        .foldLeft(b) { (acc, kv) =>
-          kv.split("=", 2) match {
-            case Array(k, v) => acc.config(k.trim, v.trim)
-            case _ => acc
-          }
-        }
-    }
-  }
-}
-import ExtraConf._
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     // Wall-clock budget for TIMED SAMPLES (seconds). Once cumulative
     // sample time exceeds it, later passes stop early so the cheapest
@@ -44,85 +21,11 @@ object Bench {
     // most of a third for the queries where a median matters; the
     // per-sample compact summary lines keep any harness kill harmless.
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BUDGET_SEC", "480").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE re-plan (coalesce/skew-split) the plans that build
-      // CACHED frames too (default false pins cached output at the raw
-      // shuffle partition count, so every cache consumer inherits it):
-      // persist-heavy catalog entries measured 0.5-0.9x with this on
-      // at sf0.1, and at scale it simply byte-sizes cached partitions
-      // like any other AQE stage (r20 optimization round, guide 2.2)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // 345 query executions share this JVM: shuffle files are only
-      // reclaimed when the ContextCleaner GCs their RDDs — hourly by
-      // default, i.e. never within a bench run. 10min keeps disk state
-      // bounded without the measurable stop-the-world System.gc()
-      // stalls a 1min cadence injected into individual samples.
-      .config("spark.cleaner.periodicGC.interval", sys.env.getOrElse("SPARK_GRAFT_GC", "10min"))
-      // test tables are single small parquet files; default 128 MiB
-      // split size would scan each on ONE core. 4 MiB spreads the scan
-      // across the local executor threads. (At production scale the
-      // default is right — this sizes splits to the actual SF.)
-      // SPARK_GRAFT_MAX_PART_BYTES overrides for scale-up dirs whose
-      // files are bigger (sf1: 512k keeps text-heavy scans wide).
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", s"${4 * 1024 * 1024}"))
-      // A/B harness for session-level tuning experiments (r20
-      // optimization round): SPARK_GRAFT_CONF="k=v;k=v" overlays extra
-      // confs. Unset (the driver's case) it is a no-op, so the bench
-      // contract and round-over-round comparability are untouched.
-      .applyExtraConf()
-      .getOrCreate()
+    val spark = Sessions.build("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     // warmup pass at the smallest sf: JIT + whole-stage-codegen compile
     // per query shape, so timed numbers measure the engine, not javac
     val warmDir = "/root/testdata/sf0.001"
-    // noop sink: materializes EVERY row and column. A count() here lets
-    // Catalyst delete provably-cardinality-preserving joins and whole
-    // subtrees — several operators would be "benchmarked" without
-    // executing at all.
-    def run(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-        dir: String): Unit =
-      fn(spark, dir).write.mode("overwrite").format("noop").save()
-    // free per-invocation state: operators that persist/localCheckpoint
-    // intermediates (sessionizeBucketed, cappedBucketPairs, kmeans)
-    // create NEW cache entries on every call — across 127 queries × 3
-    // reps those accumulate until storage memory is full and later
-    // samples measure spill, not the query (r6 diagnosis: q91 median
-    // 274 s with min 8.6 s — rep 1 fast, reps 2-3 degraded). A real
-    // deployment runs one job per session; the harness must too.
-    // Runs OUTSIDE the timed window: teardown cost belongs to the
-    // harness, not the next query's sample.
-    def teardown(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
-    // HOST-REGIME SENTINEL (VERDICT r18 item 2): a pinned calibration
-    // probe — fixed-size in-memory generate + hash-agg + sort, zero
-    // I/O, zero data dependence — run at window start and end. Three
-    // rounds running, round-over-round adjudication needed a judge
-    // re-run to separate uniform host drift (this box has ~1.3x fast/
-    // slow regimes) from a real regression; the sentinel stamps the
-    // regime INTO the artifact so bench_compare.py can normalize
-    // per-query ratios by the sentinel ratio instead. min-of-3 after a
-    // warm rep: load spikes only ever add time, so the min estimates
-    // the window's quiet cost.
-    def sentinelOnce(): Double = {
-      import org.apache.spark.sql.functions.{avg, max, sum}
-      val t0 = System.nanoTime()
-      spark.range(0, 16L * 1000 * 1000, 1, cpus.toInt)
-        .selectExpr("id % 9973 AS k", "id AS v")
-        .groupBy("k").agg(sum("v").as("s"), avg("v").as("a"), max("v").as("m"))
-        .orderBy("k")
-        .write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def sentinel(): Double = { sentinelOnce(); (1 to 3).map(_ => sentinelOnce()).min }
     var sentinelStart = -1.0
     var sentinelEnd = -1.0
     def sentinelJson: String = {
@@ -134,10 +37,12 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
-      named.foreach { case (_, fn) =>
-        try { run(fn, warmDir); teardown() } catch { case _: Throwable => () }
-      }
+    // per_query_ms keys each query by its qNN prefix: two names sharing
+    // one would overwrite a key and drop a query from the comparison
+    val prefixes = named.map(_._1.takeWhile(_ != '_'))
+    require(prefixes.distinct.size == prefixes.size,
+      s"qNN prefixes must be unique: ${prefixes.diff(prefixes.distinct).mkString(",")}")
+    Measure.warmUp(spark, warmDir, sfDir, named.map(_._2))
     // N timed samples per query, taken ROUND-ROBIN (q1..qn, q1..qn, ...)
     // so a transient machine-load spike lands in at most one sample per
     // query instead of all of them; the median then rejects it. A
@@ -222,10 +127,9 @@ object Bench {
       }.filter(_ >= 0).sum
       s"""{"metric":"total_min","value":${math.round(totalMin * 1000) / 1000.0},"unit":"sec","n_queries":${named.size},"n_failed":${failed.size},"reps":$pass,"sf":"$sfDir"}"""
     }
-    def sample(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-        pass: Int): Unit = {
+    def sample(name: String, fn: Measure.Query, pass: Int): Unit = {
       val t0 = System.nanoTime()
-      try run(fn, sfDir) catch { case _: Throwable => failed += name }
+      try Measure.noop(fn(spark, sfDir)) catch { case _: Throwable => failed += name }
       val sec = (System.nanoTime() - t0) / 1e9
       samples(name) = samples(name) :+ sec
       spent += sec
@@ -242,9 +146,10 @@ object Bench {
       // sample evidence (r6: rc=124 mid-pass left an empty artifact).
       println(compactLine(pass))
       System.out.flush()
-      teardown()
+      Measure.teardown(spark)
     }
-    sentinelStart = sentinel()
+    // host-regime sentinel at window start and end
+    sentinelStart = Measure.sentinel(spark, Sessions.cpus)
     println(s"""{"bench_sentinel":{"when":"start","sec":$sentinelStart}}""")
     System.out.flush()
     // pass 1: every query gets one sample regardless of budget —
@@ -262,7 +167,7 @@ object Bench {
       for ((name, fn) <- order if spent < budgetSec) sample(name, fn, pass)
       println(summaryLine(pass)); println(perQueryMsLine(pass)); println(minLine(pass)); println(compactLine(pass)); System.out.flush()
     }
-    sentinelEnd = sentinel()
+    sentinelEnd = Measure.sentinel(spark, Sessions.cpus)
     println(s"""{"bench_sentinel":{"when":"end","sec":$sentinelEnd}}""")
     System.out.flush()
     // Final re-print AFTER logging is forced off and the session is

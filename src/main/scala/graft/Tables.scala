@@ -19,10 +19,10 @@ object Tables {
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // events.ts has shipped as parquet TIMESTAMP(NANOS) (read as a raw
-    // long via nanosAsLong) and as TIMESTAMP(MICROS) NTZ, depending on
-    // the generator version; surface both as a proper TimestampType.
-    // The NTZ→TIMESTAMP cast is exact because every session pins UTC.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // long: graft.Sessions sets spark.sql.legacy.parquet.nanosAsLong)
+    // and as TIMESTAMP(MICROS) NTZ, depending on the generator version;
+    // surface both as a proper TimestampType. The NTZ→TIMESTAMP cast is
+    // exact because every session pins UTC.
     val df = spark.read.parquet(s"$sfDir/$name.parquet")
     if (name == "events" && df.schema("ts").dataType == LongType)
       df.withColumn("ts", timestamp_micros(expr("ts div 1000"))) // exact integer µs

@@ -275,12 +275,16 @@ case class LongL2Distance(left: Expression, right: Expression)
   * index, so with codebook rows sorted by ascending id the selection is
   * exactly the lexicographic (key ASC, id ASC) the r20 struct form and
   * the oracle's ROW_NUMBER window both implement. Returns the 0-based
-  * index (int); null input or a row whose length differs from the
-  * codebook's dimension → null (the composed forms returned null keys
-  * there too). Why an expression and not composed built-ins: per-row
-  * K-candidate selection via array_min(array(structs)) allocates K
-  * structs and compares them through an interpreted ordering, and via
-  * packed longs still plans K separate dot kernels + a CreateArray —
+  * index (int), seeded from candidate 0 so a key that overflows to
+  * Long.MaxValue still selects a real candidate. Null input → null. A
+  * row whose length differs from the codebook's dimension → null too;
+  * there the earlier composed struct form differed (its null keys
+  * sorted first, so it picked candidate 0), an edge the fixed-dimension
+  * catalog never reaches. Why an expression and not composed
+  * built-ins: per-row K-candidate selection via
+  * array_min(array(structs)) allocates K structs and compares them
+  * through an interpreted ordering, and via packed longs still plans K
+  * separate dot kernels + a CreateArray —
   * both measured SLOWER than the r19 broadcast-join+window at sf1
   * (q90 1.4×, q167 2.5×). This kernel is one reference-held long[][]
   * and one fused loop: no allocation, no per-candidate expression
@@ -319,8 +323,8 @@ case class CodebookArgmin(child: Expression, codebook: Array[Array[Long]],
     val v = input.asInstanceOf[ArrayData]
     val dims = codebook.head.length
     if (v.numElements() != dims) return null
-    var best = -1
-    var bestKey = Long.MaxValue
+    var best = 0
+    var bestKey = 0L
     var c = 0
     while (c < codebook.length) {
       val cv = codebook(c)
@@ -328,7 +332,7 @@ case class CodebookArgmin(child: Expression, codebook: Array[Array[Long]],
       var i = 0
       if (l2) while (i < dims) { val d = v.getLong(i) - cv(i); acc += d * d; i += 1 }
       else { while (i < dims) { acc += v.getLong(i) * cv(i); i += 1 }; acc = -acc }
-      if (acc < bestKey) { bestKey = acc; best = c }
+      if (c == 0 || acc < bestKey) { bestKey = acc; best = c }
       c += 1
     }
     best
@@ -353,14 +357,14 @@ case class CodebookArgmin(child: Expression, codebook: Array[Array[Long]],
         |if ($v.numElements() != $dims) {
         |  ${ev.isNull} = true;
         |} else {
-        |  int $best = -1;
-        |  long $bestKey = Long.MAX_VALUE;
+        |  int $best = 0;
+        |  long $bestKey = 0L;
         |  for (int $c = 0; $c < ${codebook.length}; $c++) {
         |    final long[] $cv = $cb[$c];
         |    long $acc = 0L;
         |    for (int $i = 0; $i < $dims; $i++) { $inner }
         |    $flip
-        |    if ($acc < $bestKey) { $bestKey = $acc; $best = $c; }
+        |    if ($c == 0 || $acc < $bestKey) { $bestKey = $acc; $best = $c; }
         |  }
         |  ${ev.value} = $best;
         |}

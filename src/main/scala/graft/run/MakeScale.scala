@@ -1,4 +1,6 @@
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+package graft.run
+
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator for shuffle/spill experiments (VERDICT r3 item 3):
@@ -13,7 +15,7 @@ import org.apache.spark.sql.functions._
   * ops then see genuine duplicate mass, which is the stressful (and
   * realistic, crawl-like) regime for the capped LSH paths.
   *
-  * Usage: runMain MakeScale <srcSfDir> <outDir> [factor=10]
+  * Usage: runMain graft.run.MakeScale <srcSfDir> <outDir> [factor=10]
   * The output is a drop-in sfDir for Bench/Verify. NOT driver data —
   * local scale experiments only (TESTDATA.md's tables stay canonical).
   */
@@ -27,13 +29,7 @@ object MakeScale {
     val src = args(0)
     val out = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-make-scale")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.build("graft-make-scale")
     spark.sparkContext.setLogLevel("WARN")
 
     def copies(df: DataFrame)(shift: (DataFrame, Long) => DataFrame): DataFrame =

@@ -1,6 +1,6 @@
 package graft.run
 
-import org.apache.spark.sql.SparkSession
+import graft.{Measure, Sessions}
 import org.apache.spark.sql.functions._
 
 /** Production-grain measurement of the incremental sticky split (r17
@@ -22,24 +22,7 @@ object SplitIncrementalBench {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE re-plan (coalesce/skew-split) the plans that build
-      // CACHED frames too (default false pins cached output at the raw
-      // shuffle partition count, so every cache consumer inherits it):
-      // persist-heavy catalog entries measured 0.5-0.9x with this on
-      // at sf0.1, and at scale it simply byte-sizes cached partitions
-      // like any other AQE stage (r20 optimization round, guide 2.2)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", s"${4 * 1024 * 1024}"))
-      .getOrCreate()
+    val spark = Sessions.build("graft-split-incremental-bench")
     spark.sparkContext.setLogLevel("WARN")
     val root = java.nio.file.Files.createTempDirectory("graft-sib").toString
     // ---- untimed: materialize the production inputs (q212's fixture
@@ -56,23 +39,17 @@ object SplitIncrementalBench {
       .select(col("doc_id"), col("side"))
       .write.mode("overwrite").parquet(s"$root/assigned")
     pairsOf(docs).write.mode("overwrite").parquet(s"$root/pairs")
-    def teardown(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
-    teardown()
+    Measure.teardown(spark)
     // ---- timed: the operator alone over the materialized inputs
     val samples = (1 to reps).map { _ =>
       val assigned = spark.read.parquet(s"$root/assigned")
       val pairs = spark.read.parquet(s"$root/pairs")
       val t0 = System.nanoTime()
-      graft.operators.CorpusPrep.leakageSafeSplitIncremental(
+      Measure.noop(graft.operators.CorpusPrep.leakageSafeSplitIncremental(
           assigned, graft.operators.Fanout.forKernel(docs), "doc_id", pairs,
-          testPct = 10)
-        .write.mode("overwrite").format("noop").save()
+          testPct = 10))
       val sec = (System.nanoTime() - t0) / 1e9
-      teardown()
+      Measure.teardown(spark)
       sec
     }.sorted
     val med = samples(samples.size / 2)

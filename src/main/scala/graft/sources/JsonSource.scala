@@ -28,10 +28,6 @@ object JsonSource {
   def readUser(spark: SparkSession, baseDir: String, topicPrefix: String = ""): DataFrame =
     readTopic(spark, baseDir, topicPrefix + "user", Schemas.rawUser)
 
-  /** Dev-only: schema inference, the reference's actual behavior. */
-  def readTopicInferred(spark: SparkSession, baseDir: String, topic: String): DataFrame =
-    spark.read.option("inferSchema", "true").json(s"$baseDir/topics/$topic/partition=*")
-
   /** Robustness variant: PERMISSIVE read that quarantines malformed
     * lines into `_corrupt_record` instead of nulling them silently —
     * at corpus scale a bad producer must not crash the job (FAILFAST)

@@ -25,6 +25,8 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
+      // as graft.Sessions: Tables.load reads TIMESTAMP(NANOS) as a long
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // janino failures in our doGenCode must fail tests, not silently
       // drop the whole plan to interpreted mode
       .config("spark.sql.codegen.fallback", "false")

@@ -73,6 +73,12 @@ class TwinLinkageSpec extends SparkSpec {
     d
   }
 
+  test("every catalog name has a unique qNN prefix (Bench's per_query_ms keys)") {
+    val prefixes = SparkEntry.queries.keys.toSeq.map(_.takeWhile(_ != '_'))
+    assert(prefixes.distinct.size == prefixes.size,
+      s"shared prefixes: ${prefixes.diff(prefixes.distinct).mkString(",")}")
+  }
+
   private def q(name: String): DataFrame = SparkEntry.queries(name)(spark, dir)
 
   /** (id → (keep_id, is_duplicate)) map of a keeper-shaped result. */

@@ -75,4 +75,23 @@ class GraftExpressionsSpec extends SparkSpec {
       .selectExpr("graft_nfc(t) AS n").as[String].head()
     assert(viaSql == composed)
   }
+
+  test("codebook argmax-dot: a key of exactly Long.MaxValue still picks candidate 0") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.graft.shim
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    val cb = Array(Array(1L))
+    val x = Long.MinValue + 1 // key = −(x·1) = Long.MaxValue
+    val interpreted = CodebookArgmin(
+      Literal.create(Seq(x), ArrayType(LongType, containsNull = false)), cb, l2 = false)
+    assert(interpreted.eval() == 0)
+    // id + x keeps the input non-foldable, so the kernel runs in codegen
+    val df = spark.range(1).select(shim.column(CodebookArgmin(
+      shim.expression(array(col("id") + lit(x))), cb, l2 = false)))
+    assert(df.queryExecution.executedPlan.collect { case w: WholeStageCodegenExec => w }
+      .exists(_.child.expressions.exists(_.exists(_.isInstanceOf[CodebookArgmin]))),
+      "the kernel must run inside whole-stage codegen")
+    assert(df.as[Int].head() == 0)
+  }
 }
