@@ -324,7 +324,7 @@ case class CodebookArgmin(child: Expression, codebook: Array[Array[Long]],
     val dims = codebook.head.length
     if (v.numElements() != dims) return null
     var best = 0
-    var bestKey = 0L
+    var bestKey = Long.MaxValue
     var c = 0
     while (c < codebook.length) {
       val cv = codebook(c)
@@ -332,7 +332,7 @@ case class CodebookArgmin(child: Expression, codebook: Array[Array[Long]],
       var i = 0
       if (l2) while (i < dims) { val d = v.getLong(i) - cv(i); acc += d * d; i += 1 }
       else { while (i < dims) { acc += v.getLong(i) * cv(i); i += 1 }; acc = -acc }
-      if (c == 0 || acc < bestKey) { bestKey = acc; best = c }
+      if (acc < bestKey) { bestKey = acc; best = c }
       c += 1
     }
     best
@@ -358,13 +358,13 @@ case class CodebookArgmin(child: Expression, codebook: Array[Array[Long]],
         |  ${ev.isNull} = true;
         |} else {
         |  int $best = 0;
-        |  long $bestKey = 0L;
+        |  long $bestKey = Long.MAX_VALUE;
         |  for (int $c = 0; $c < ${codebook.length}; $c++) {
         |    final long[] $cv = $cb[$c];
         |    long $acc = 0L;
         |    for (int $i = 0; $i < $dims; $i++) { $inner }
         |    $flip
-        |    if ($c == 0 || $acc < $bestKey) { $bestKey = $acc; $best = $c; }
+        |    if ($acc < $bestKey) { $bestKey = $acc; $best = $c; }
         |  }
         |  ${ev.value} = $best;
         |}

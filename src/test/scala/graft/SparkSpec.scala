@@ -18,20 +18,19 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // as graft.Sessions: Tables.load reads TIMESTAMP(NANOS) as a long
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // the conf set every main gets from graft.Sessions, taken as data
+    // (Sessions.build would read the SPARK_GRAFT_CONF overlay), plus the
+    // test-only keys
+    val confs = Sessions.confs("", Seq(
+      "spark.master" -> "local[4]",
+      "spark.sql.shuffle.partitions" -> "4",
       // janino failures in our doGenCode must fail tests, not silently
       // drop the whole plan to interpreted mode
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      "spark.sql.codegen.fallback" -> "false",
+      "spark.ui.enabled" -> "false"))
+    val s = confs.foldLeft(SparkSession.builder().appName("graft-tests")) {
+      case (b, (k, v)) => b.config(k, v)
+    }.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
