@@ -8,8 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Byte-pair-encoding subword tokenization as dataflow — the real-token
-  * counterpart of [[TextFunctions.subwordCount]]'s proxy, so token
+/** Byte-pair-encoding subword tokenization as dataflow, so token
   * budgets (q122-family) and sequence packing (q89-family) can run on
   * actual BPE counts.
   *

@@ -61,14 +61,6 @@ object TextFunctions {
 
   def tokenCount(c: Column): Column = size(tokens(c)).cast("long")
 
-  /** BPE-ish subword segmentation proxy: counts word pieces produced by
-    * splitting on whitespace AND punctuation/digit boundaries — a cheap,
-    * deterministic stand-in for a real tokenizer's token count. */
-  def subwordCount(c: Column): Column =
-    size(filter(
-      split(lower(c), "[^a-z0-9]+|(?<=[a-z])(?=[0-9])|(?<=[0-9])(?=[a-z])"),
-      t => length(t) > 0)).cast("long")
-
   /** Word n-gram shingles over the token array: a column of
     * `array<string>` where each element is n consecutive tokens joined by
     * a space. Fewer than n tokens → single shingle of the whole text. */

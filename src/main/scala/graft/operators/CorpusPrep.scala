@@ -110,9 +110,7 @@ object CorpusPrep {
       idCol, cap)
 
   /** The cap half of [[domainCap]] on an already-extracted
-    * (domain, id) frame — also the merge step of the streaming twin
-    * (`StreamPipeline.domainCapStream`): TopK merge is associative, so
-    * re-capping `state ∪ batch` equals capping all data ever seen. */
+    * (domain, id) frame: a deterministic hash-order top-k per domain. */
   def capByDomain(df: DataFrame, idCol: String, cap: Int): DataFrame = {
     require(cap > 0)
     df.select(col("domain"), col(idCol).cast("long").as("_id"))
@@ -577,7 +575,7 @@ object CorpusPrep {
     *
     * Scale shape: the only corpus-grain work is the caller's per-group
     * token aggregate (map-combined); the allocation itself runs on the
-    * DRIVER over the collected group-grain stats — the q89/Bucketing
+    * DRIVER over the collected group-grain stats — the q89
     * bounded-driver discipline, with the bound explicit: the group
     * domain (languages) is semantically small, and `maxGroups` fails
     * loudly rather than collecting an unbounded frame. The sequential

@@ -189,6 +189,15 @@ object Dedup {
         positives.join(idx, col("content_hash") === col("_ih"), "left_anti"))
   }
 
+  /** Within-cluster candidate pairs — the public face of
+    * [[cappedBucketPairs]] for cluster-keyed dedup (SemDeDup / q153):
+    * one cluster id column plays the bucket key, a hot cluster emits a
+    * star to its min id instead of |cluster|² pairs. */
+  def clusterPairs(assigned: DataFrame, clusterCol: String, idCol: String,
+      cap: Int = 4096): DataFrame =
+    cappedBucketPairs(assigned.select(col(clusterCol), col(idCol)),
+      Seq(clusterCol), idCol, cap)
+
   /** Candidate (id_a < id_b) pairs from a banded signature frame via
     * equi-self-join on the bucket keys, with a per-bucket frequency cap:
     * a degenerate bucket (boilerplate band value, empty docs) of size n
@@ -201,81 +210,6 @@ object Dedup {
     * against the representative, so a member pair whose similarity
     * exists only via that bucket can be missed — at the gain of bounded
     * work regardless of skew. */
-  /** INCREMENTAL perceptual-signature dedup — [[dedupIncremental]]'s
-    * Hamming-ball analogue for 64-bit image/simhash signatures: a fresh
-    * batch must drop (a) within-batch near-dups (single-hop min-id
-    * keeper over [[hammingPairs]]) and (b) anything within `maxHamming`
-    * of a signature already in the at-rest INDEX. Returns the surviving
-    * `(idCol, hashCol)` rows of `incoming`.
-    *
-    * Scale shape: the index check is the pigeonhole band join gated by
-    * a bounded-bytes bloom over the index's (chunk_idx, chunk_value)
-    * set — a batch signature none of whose maxHamming+1 chunks is
-    * bloom-positive is provably > maxHamming from every indexed
-    * signature and short-circuits map-side with zero exchange; only
-    * bloom-positive chunks join the index chunk table, so the one
-    * exchange scales with |candidate chunks|, not |batch| or |index|.
-    * False positives cost a popcount re-check, never a wrong drop. */
-  def dedupIncrementalHamming(incoming: DataFrame, idCol: String,
-      hashCol: String, indexHashes: DataFrame, indexHashCol: String,
-      maxHamming: Int, expectedItems: Long = 1000000L,
-      numBits: Long = 1L << 23,
-      precomputedBloom: Option[Array[Byte]] = None): DataFrame = {
-    import org.apache.spark.sql.graft.shim
-    val chunks = maxHamming + 1
-    val bitsPer = 64 / chunks
-    def chunkCols(h: org.apache.spark.sql.Column) = (0 until chunks).map { i =>
-      shiftrightunsigned(h, i * bitsPer).bitwiseAND(lit((1L << bitsPer) - 1))
-    }
-    // (a) within-batch single-hop keepers
-    val pairs = hammingPairs(incoming, idCol, hashCol, maxHamming)
-    val batchKept = incoming.select(col(idCol), col(hashCol))
-      .join(pairs.select(col("id_b").as(idCol)).distinct(), Seq(idCol), "left_anti")
-    val idx = indexHashes.select(col(indexHashCol).cast("long").as("_ih")).distinct()
-    // (b) bloom over the index's pigeonhole (chunk, value) keys — from
-    // the at-rest sidecar fold when the caller maintains one
-    // ([[graft.streaming.IndexState.dhashElems]], same elements), else
-    // aggregated from the index here (batch/one-shot callers).
-    val bloomBytes = precomputedBloom.getOrElse {
-      if (idx.isEmpty) return batchKept
-      idx.select(col("_ih"), posexplode(array(chunkCols(col("_ih")): _*)))
-        .select(shim.column(
-          new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-            shim.expression(xxhash64(col("pos"), col("col"))),
-            shim.expression(lit(expectedItems)), shim.expression(lit(numBits)))
-            .toAggregateExpression()).as("_bf"))
-        .head().getAs[Array[Byte]]("_bf")
-    }
-    if (bloomBytes == null) return batchKept
-    val bloomF = graft.functions.BloomProbe.deserialize(bloomBytes)
-    def mightContain(c: org.apache.spark.sql.Column, cv: org.apache.spark.sql.Column) =
-      graft.functions.BloomProbe(bloomF, xxhash64(c, cv))
-    val banded = batchKept.select(col(idCol), col(hashCol),
-        posexplode(array(chunkCols(col(hashCol)): _*)))
-      .select(col(idCol), col(hashCol), col("pos").as("_c"), col("col").as("_cv"))
-      .filter(mightContain(col("_c"), col("_cv")))
-    // zero-candidate fast path: a batch none of whose signatures has a
-    // single bloom-positive chunk is provably > maxHamming from every
-    // indexed signature — skip the index chunk join (and its index
-    // scan) entirely; the check is one bounded job over the batch.
-    if (banded.isEmpty) return batchKept
-    val idx4 = idx.select(col("_ih"), posexplode(array(chunkCols(col("_ih")): _*)))
-      .select(col("_ih"), col("pos").as("_c"), col("col").as("_cv"))
-    val hits = banded.join(idx4, Seq("_c", "_cv"))
-      .filter(bit_count(col(hashCol).bitwiseXOR(col("_ih"))) <= maxHamming)
-      .select(col(idCol)).distinct()
-    batchKept.join(hits, Seq(idCol), "left_anti")
-  }
-
-  /** Within-cluster candidate pairs — the public face of
-    * [[cappedBucketPairs]] for cluster-keyed dedup (SemDeDup / q153):
-    * one cluster id column plays the bucket key, a hot cluster emits a
-    * star to its min id instead of |cluster|² pairs. */
-  def clusterPairs(assigned: DataFrame, clusterCol: String, idCol: String,
-      cap: Int = 4096): DataFrame =
-    cappedBucketPairs(assigned.select(col(clusterCol), col(idCol)),
-      Seq(clusterCol), idCol, cap)
-
   private[operators] def cappedBucketPairs(
       banded: DataFrame, keys: Seq[String], idCol: String, cap: Int): DataFrame = {
     val (plan, cleanup) = cappedBucketPairsLazy(banded, keys, idCol, cap)
@@ -654,17 +588,6 @@ object Dedup {
       GraftFunctions.simhash64(
         transform(T.tokens(col(textCol)), t => T.md5Hash64(t))).as("simhash"))
   }
-
-  /** SimHash near-dup pairs with Hamming distance ≤ maxHamming, using
-    * the banding trick: split the 64-bit hash into `64/(maxHamming+1)`-bit
-    * chunks — any pair within the distance budget must agree exactly on
-    * at least one chunk (pigeonhole), so candidates come from equi-joins
-    * on (chunk_idx, chunk_value), never a cross join. */
-  def simhashPairs(
-      df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, hotBucketCap: Int = 4096): DataFrame =
-    hammingPairs(simhashes(df, idCol, textCol), idCol, "simhash",
-      maxHamming, hotBucketCap)
 
   /** Hamming-ball pairs over ANY 64-bit signature column (SimHash,
     * image dHash, …) via the pigeonhole banding trick: candidates from

@@ -5,11 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Time-series repair: per-key daily gap-fill + linear interpolation —
-  * the pass that fills sensor/metric gaps before training (q128; the
-  * streaming twin lives in `StreamPipeline.interpolateDailyStream`).
-  *
-  * Shared by the batch query and the per-micro-batch recompute so the
-  * two can never drift: one definition, two call sites.
+  * the pass that fills sensor/metric gaps before training (q128).
   *
   * Scale shape: the grid explode is bounded by each user's observed
   * span, both window passes share one (user_id, day) sort, and the only

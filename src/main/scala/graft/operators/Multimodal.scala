@@ -4,19 +4,11 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: image/audio/video travel as opaque
-  * `binary` columns with typed metadata; decode/feature-extraction runs
-  * partition-batched so a real decoder (JNI/FFI image lib) amortizes its
-  * init cost per partition, not per row.
-  *
-  * Two tiers:
-  *   - HEADER-LEVEL metadata is REAL: [[sniffFormat]] (container magic
-  *     bytes) and [[parseDimensions]] (PNG IHDR / GIF screen descriptor /
-  *     JPEG SOF scan) are dependency-free byte readers, tested against
-  *     hand-built valid headers — no codec library involved.
-  *   - PIXEL-level decode stays a clearly-marked DETERMINISTIC STUB
-  *     (the container ships no image/audio codecs); the Spark-side
-  *     contract — schema, binary handling, mapPartitions batching — is
-  *     the production plumbing either way.
+  * `binary` columns; decode and feature extraction run partition-batched
+  * so a decoder amortizes its init cost per partition, not per row.
+  * Container sniffing ([[sniffFormat]]) and the WAV and y4m header
+  * walks are dependency-free byte readers; pixel decode
+  * ([[decodePixels]]) uses the JDK's ImageIO codecs.
   */
 object Multimodal {
 
@@ -33,40 +25,10 @@ object Multimodal {
     } else "unknown"
   }
 
-  /** REAL (width, height) from image headers, None when unparseable.
-    *   - PNG: IHDR is mandatory-first — big-endian ints at offsets 16/20.
-    *   - GIF: logical screen descriptor — little-endian u16 at 6/8.
-    *   - JPEG: walk the marker segments to the first SOFn frame header
-    *     (skipping DHT/DAC/RST/standalone markers) and read the
-    *     big-endian height/width that follow the precision byte. */
-  def parseDimensions(b: Array[Byte]): Option[(Int, Int)] = {
-    def u(i: Int) = b(i) & 0xff
-    def be32(i: Int) = (u(i) << 24) | (u(i + 1) << 16) | (u(i + 2) << 8) | u(i + 3)
-    def be16(i: Int) = (u(i) << 8) | u(i + 1)
-    def le16(i: Int) = u(i) | (u(i + 1) << 8)
-    sniffFormat(b) match {
-      case "png" if b.length >= 24 => Some((be32(16), be32(20)))
-      case "gif" if b.length >= 10 => Some((le16(6), le16(8)))
-      case "jpeg" =>
-        var i = 2
-        while (i + 9 < b.length) {
-          if (u(i) != 0xff) return None // desynced — corrupt stream
-          val marker = u(i + 1)
-          if (marker == 0xff) i += 1 // B.1.1.2: 0xFF fill bytes before a marker
-          else if (marker == 0xd8 || (marker >= 0xd0 && marker <= 0xd7) || marker == 0x01) i += 2
-          else if (marker >= 0xc0 && marker <= 0xcf && marker != 0xc4 && marker != 0xc8 && marker != 0xcc)
-            return Some((be16(i + 7), be16(i + 5))) // (width, height): w after h in SOF
-          else i += 2 + be16(i + 2) // skip segment by its length field
-        }
-        None
-      case _ => None
-    }
-  }
-
   /** REAL audio metadata from a RIFF/WAVE header: walks the chunk list
     * to `fmt ` (channels, sample rate, bits per sample) and `data`
     * (payload size → frame count). Dependency-free little-endian byte
-    * reader, same tier as [[parseDimensions]]; None when the payload is
+    * reader, same tier as [[sniffFormat]]; None when the payload is
     * not a well-formed WAV. Returns (sampleRate, channels,
     * bitsPerSample, nFrames). */
   def parseWavMeta(b: Array[Byte]): Option[(Int, Int, Int, Long)] = {
@@ -99,11 +61,6 @@ object Multimodal {
     else Some((rate, ch, bits, dataLen / (ch.toLong * (bits / 8).max(1))))
   }
 
-  /** Decoded-media metadata row (what a real decoder would emit). */
-  case class MediaMeta(
-      doc_id: Long, byte_len: Long, format: String,
-      width: Int, height: Int, checksum: Long)
-
   /** Attach an opaque binary payload + declared format to each row.
     * On a real pipeline the payload IS the stored bytes; here it is the
     * UTF-8 text bytes, which keeps sizes/content deterministic. */
@@ -114,26 +71,6 @@ object Multimodal {
       when(col(idCol) % 3 === 0, "jpeg")
         .when(col(idCol) % 3 === 1, "png")
         .otherwise("webp").as("format"))
-
-  /** Partition-batched REAL header decode: sniffed format + parsed
-    * dimensions (0×0 when the payload isn't a parseable image) + content
-    * checksum, one pass per partition. A pixel decoder would extend
-    * `decodeHeader` — the iterator/batching/encoder shape is final. */
-  def decodeHeaders(df: DataFrame, idCol: String): Dataset[MediaMeta] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, payload) =>
-          val (w, h) = parseDimensions(payload).getOrElse((0, 0))
-          var checksum = 1125899906842597L
-          var i = 0
-          while (i < payload.length) { checksum = 31 * checksum + (payload(i) & 0xffL); i += 1 }
-          MediaMeta(id, payload.length.toLong, sniffFormat(payload), w, h, checksum)
-        }
-      }
-  }
 
   /** Decoded-pixel feature row: real dimensions plus channel means and
     * a 16-bin luma histogram — the cheap per-image features a training
@@ -230,41 +167,6 @@ object Multimodal {
           }
         }
       }
-  }
-
-  /** REAL resize: decode → bilinear-interpolated redraw at (w, h) →
-    * re-encode PNG (lossless, so tests can decode and check pixels).
-    * Output keeps the id plus the resized payload; undecodable inputs
-    * pass through as null payloads for downstream filtering. */
-  def resizeImages(df: DataFrame, idCol: String, w: Int, h: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        System.setProperty("java.awt.headless", "true")
-        javax.imageio.ImageIO.setUseCache(false)
-        rows.map { case (id, payload) =>
-          val img =
-            try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-            catch { case _: Exception => null }
-          if (img == null) (id, null: Array[Byte])
-          else {
-            val out = new java.awt.image.BufferedImage(
-              w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-            val g2 = out.createGraphics()
-            g2.setRenderingHint(
-              java.awt.RenderingHints.KEY_INTERPOLATION,
-              java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-            g2.drawImage(img, 0, 0, w, h, null)
-            g2.dispose()
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(out, "png", bos)
-            (id, bos.toByteArray)
-          }
-        }
-      }
-      .toDF(idCol, "payload")
   }
 
   /** Near-duplicate image fixture: groups of 5 images share one
@@ -697,53 +599,5 @@ object Multimodal {
       .toDF(idCol, "dhash")
       .filter(col("dhash").isNotNull)
       .select(col(idCol), col("dhash").cast("long"))
-  }
-
-  /** Partition-batched "decode": one pass per partition over the binary
-    * payloads. STUB — retained as the template for formats the JDK
-    * cannot decode (video/audio codecs); images now have the REAL
-    * [[decodePixels]] path above. Everything around `decodeOne`
-    * (iterator shape, per-partition batching, output encoder) is the
-    * production plumbing. */
-  def decodeStub(df: DataFrame, idCol: String): Dataset[MediaMeta] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col("payload"), col("format"))
-      .as[(Long, Array[Byte], String)]
-      .mapPartitions { rows =>
-        // per-partition init happens HERE in a real decoder (lib handle)
-        rows.map { case (id, payload, format) => decodeOne(id, payload, format) }
-      }
-  }
-
-  /** STUB decoder: derives deterministic fake dimensions from the first
-    * payload bytes. Replace with a real format parser. */
-  private def decodeOne(id: Long, payload: Array[Byte], format: String): MediaMeta = {
-    var checksum = 1125899906842597L
-    var i = 0
-    while (i < payload.length) { checksum = 31 * checksum + (payload(i) & 0xffL); i += 1 }
-    val w = 64 + (math.abs(checksum) % 1024).toInt
-    val h = 64 + (math.abs(checksum >> 10) % 1024).toInt
-    MediaMeta(id, payload.length.toLong, format, w, h, checksum)
-  }
-
-  /** Frame-sampling stub for video payloads: emits every nth "frame"
-    * index with a per-frame checksum slice — the generator shape
-    * (one-to-many via flatMap inside mapPartitions) matches a real
-    * frame extractor. */
-  def frameSampleStub(df: DataFrame, idCol: String, everyNth: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, payload) =>
-          val nFrames = math.max(1, payload.length / 32)
-          (0 until nFrames by everyNth).map { f =>
-            (id, f, payload.slice(f * 32, math.min(payload.length, f * 32 + 32)).length)
-          }
-        }
-      }
-      .toDF(idCol, "frame_idx", "frame_bytes")
   }
 }

@@ -36,7 +36,7 @@ object Similarity {
     * candidate-fraction cut of the cosine work.
     *
     * Candidate generation is the pigeonhole banding equi-join (same
-    * trick as `Dedup.simhashPairs`, VERDICT r1 wrong#4): the signature
+    * trick as [[Dedup.hammingPairs]], VERDICT r1 wrong#4): the signature
     * is split into bit-chunks — any pair within the Hamming budget must
     * agree closely enough on at least one chunk — and the exploded
     * corpus side HASH-joins the broadcast exploded query side on
@@ -461,49 +461,5 @@ object Similarity {
       .select(col("id_a"), col("id_b"), V.cosine(col("vec_a"), col("vec_b")).as("cosine"))
       .distinct()
       .filter(col("cosine") >= threshold)
-  }
-
-  /** SemDeDup-style embedding-cluster dedup (Abbas et al. 2023, public
-    * arXiv:2303.09540): k-means partitions the embedding space, pairs
-    * are generated only WITHIN a cluster, cosine-verified against the
-    * threshold, and each duplicate points at its min-id keeper — the
-    * embedding-space analogue of the MinHash-LSH pipeline, with the
-    * cluster id playing the LSH bucket's role.
-    *
-    * Scale shape: centroid training is the bounded-sample
-    * [[kmeansCentroids]] (driver data capped, corpus untouched);
-    * assignment is one broadcast pass over the corpus (argmax cosine,
-    * ties to the smaller list id); candidate pairs come from the
-    * cluster-keyed equi-self-join through
-    * [[Dedup.cappedBucketPairs]], so a degenerate hot cluster (all-
-    * identical embeddings, a dead centroid attracting everything)
-    * emits a STAR to its min id instead of |cluster|² pairs; exact
-    * cosine runs only on surviving candidates. Per-cluster pair cost
-    * is Σ|cluster|², bounded by the cap — pick k so the mean cluster
-    * is ~corpus/k and the cap absorbs skew.
-    *
-    * Output: `(id, keep_id, is_duplicate)`, the [[Dedup]] convention. */
-  def semanticDedup(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, threshold: Double, iters: Int = 3,
-      hotClusterCap: Int = 4096): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val cents = kmeansCentroids(corpus, idCol, vecCol, k, iters)
-    val vecs = Fanout.forKernel(corpus)
-      .select(col(idCol).cast("long").as(idCol), col(vecCol).as("_vec"))
-      .persist(MEMORY_AND_DISK)
-    val assignScores = vecs
-      .crossJoin(broadcast(cents))
-      .select(col(idCol), col("_list"),
-        V.cosine(col("_vec"), col("_centroid")).as("cosine"))
-    val assigned = topKPerQuery(assignScores, idCol, "_list", 1)
-      .select(col(idCol).cast("long").as(idCol), col("_list"))
-    val pairs = Dedup.clusterPairs(assigned, "_list", idCol, hotClusterCap)
-    val verified = pairs
-      .join(vecs.select(col(idCol).as("id_a"), col("_vec").as("_va")), Seq("id_a"))
-      .join(vecs.select(col(idCol).as("id_b"), col("_vec").as("_vb")), Seq("id_b"))
-      .filter(V.cosine(col("_va"), col("_vb")) >= threshold)
-      .select("id_a", "id_b")
-    Dedup.keeperFrom(vecs, idCol, verified)
   }
 }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The reference's cleaning transforms as pure `DataFrame => DataFrame`
@@ -43,23 +43,11 @@ object Clean {
   /** F1+F8 — follower_count "25k"/"1M" expansion by string surgery then
     * int cast (BatchProcessingFinal.ipynb:1219-1222). Parity semantics:
     * `[kK]`→"000", `[mM]`→"000000"; anything still non-integer (e.g.
-    * "25.5k" → "25.5000") casts to NULL (SURVEY §7.4). `strict=false`
-    * does real numeric scaling instead (25.5k → 25500). */
-  def expandFollowerCount(strict: Boolean = true)(df: DataFrame): DataFrame =
-    if (strict)
-      df.withColumn("follower_count",
-        expr("""TRY_CAST(REGEXP_REPLACE(REGEXP_REPLACE(follower_count,
-                '[kK]', '000'), '[mM]', '000000') AS INT)"""))
-    else {
-      val base = regexp_extract(col("follower_count"), "^([0-9]+\\.?[0-9]*)$|^([0-9]+\\.?[0-9]*)[kKmM]$", 0)
-      val digits = regexp_replace(base, "[kKmM]$", "")
-      val mult = when(col("follower_count").rlike("^[0-9.]+[kK]$"), 1000)
-        .when(col("follower_count").rlike("^[0-9.]+[mM]$"), 1000000)
-        .otherwise(1)
-      df.withColumn("follower_count",
-        when(digits === "" || digits.isNull, lit(null))
-          .otherwise((digits.cast("double") * mult).cast("int")))
-    }
+    * "25.5k" → "25.5000") casts to NULL (SURVEY §7.4). */
+  def expandFollowerCount(df: DataFrame): DataFrame =
+    df.withColumn("follower_count",
+      expr("""TRY_CAST(REGEXP_REPLACE(REGEXP_REPLACE(follower_count,
+              '[kK]', '000'), '[mM]', '000000') AS INT)"""))
 
   /** F6 — coordinates = array(latitude, longitude), drop the parts
     * (BatchProcessingFinal.ipynb:1400). */
@@ -105,7 +93,7 @@ object Clean {
     }
     garbaged
       .transform(stripSaveLocationPrefix)
-      .transform(expandFollowerCount())
+      .transform(expandFollowerCount)
       .withColumnRenamed("index", "ind")
       .select(Schemas.cleanPinColumns.map(col): _*)
   }
@@ -119,26 +107,4 @@ object Clean {
     df.transform(buildUserName)
       .transform(parseTimestamp("date_joined"))
       .select(Schemas.cleanUserColumns.map(col): _*)
-
-  // ---- typed Dataset surface (SURVEY §1.4) ----------------------------
-
-  /** Cleaned pin rows as a typed Dataset — compile-time field checks
-    * downstream; the plan is identical to the DataFrame form. */
-  def pinTyped(df: DataFrame): Dataset[PinPost] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    pin(df).as[PinPost]
-  }
-
-  def geoTyped(df: DataFrame): Dataset[GeoEvent] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    geo(df).as[GeoEvent]
-  }
-
-  def userTyped(df: DataFrame): Dataset[UserRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    user(df).as[UserRow]
-  }
 }

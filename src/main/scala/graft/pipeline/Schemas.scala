@@ -54,18 +54,3 @@ object Schemas {
   val cleanGeoColumns: Seq[String] = Seq("ind", "country", "coordinates", "timestamp")
   val cleanUserColumns: Seq[String] = Seq("ind", "user_name", "age", "date_joined")
 }
-
-/** Typed row models for the cleaned tables (Dataset[T] surface). */
-case class PinPost(
-    ind: Long, unique_id: String, title: String, description: String,
-    follower_count: Option[Int], poster_name: String, tag_list: String,
-    is_image_or_video: String, image_src: String, save_location: String,
-    category: String)
-
-case class GeoEvent(
-    ind: Long, country: String, coordinates: Seq[Double],
-    timestamp: java.sql.Timestamp)
-
-case class UserRow(
-    ind: Long, user_name: String, age: Long,
-    date_joined: java.sql.Timestamp)

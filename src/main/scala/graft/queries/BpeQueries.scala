@@ -6,9 +6,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Real BPE subword tokenization as dataflow (round 11) — the engine's
-  * token budgets and packing previously ran on a whitespace /
-  * `subwordCount` surrogate; these queries run them on actual
-  * byte-pair-encoding counts from a tokenizer TRAINED on the corpus.
+  * token budgets and packing previously ran on a whitespace surrogate;
+  * these queries run them on actual byte-pair-encoding counts from a
+  * tokenizer TRAINED on the corpus.
   *
   * Everything is oracled end-to-end: the DuckDB side replays the exact
   * training loop (weighted pair argmax with (count DESC, left, right)

@@ -934,11 +934,9 @@ object Extended {
 
     // ---- q153: SemDeDup-style embedding-cluster dedup, quantized twin
     // (Abbas et al. 2023, arXiv:2303.09540) — k-means-partitioned space,
-    // pairs only WITHIN a cluster, cosine-verified, min-id keeper. The
-    // production operator is Similarity.semanticDedup (trained float
-    // centroids, capped cluster pairs); this twin pins its exact
-    // topology under the hash gate the way q90 pins IVF: centroids are
-    // the first-12 pinned seed regime, arithmetic is the q86/q92
+    // pairs only WITHIN a cluster, cosine-verified, min-id keeper. This
+    // twin pins the topology under the hash gate the way q90 pins IVF:
+    // centroids are the first-12 pinned seed regime, arithmetic is the q86/q92
     // integer quantization (assignment argmax by integer dot with
     // (d DESC, list_id) ties; verify cos ≥ 0.4 as 25·dot² ≥ 4·na·nb),
     // candidates run through the SAME Dedup.clusterPairs machinery
@@ -1020,9 +1018,9 @@ object Extended {
           .select(col("vec_id"), col("list_id"), col("keep_id"), col("is_duplicate"))
       }),
 
-    // ---- q160: semanticDedup's CAPPED path under the hash gate —
+    // ---- q160: the CAPPED cluster-pair path under the hash gate —
     // q153 deliberately uncaps clusterPairs so the oracle's plain
-    // self-join stays exact; that left the production hotClusterCap
+    // self-join stays exact; that left the hot-cluster cap's
     // star topology (a hot cluster emits (min_id → member) pairs, not
     // |cluster|²) with no gate of its own. Here cap = 40 splits the
     // sf0.01 clustering into 6 hot + 6 cold clusters (sizes 34–53), so

@@ -2,7 +2,8 @@ package graft.queries
 
 import graft.QuerySpec
 import graft.pipeline.{Clean, PinQueries}
-import graft.sources.{EmulatorGenerator, JsonSource}
+import graft.sources.{EmulatorGenerator, FileJsonTableSource}
+import graft.sources.PipelineTable.{Geo, Pin, User}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Reference-parity pipeline surfaced through the driver's correctness
@@ -62,16 +63,13 @@ object PipelineParity {
 
   /** Land the raw frames once per JVM. `coalesce(1)` — the fixture is
     * tiny and a single file keeps the oracle's read_parquet glob
-    * trivial; production landing uses the partitioned writers in
-    * [[graft.operators.Bucketing]] instead. */
+    * trivial. */
   private def landRawParquet(spark: SparkSession, base: String): Unit = synchronized {
     if (!rawLanded) {
-      Seq(
-        "pin" -> JsonSource.readPin(spark, base),
-        "geo" -> JsonSource.readGeo(spark, base),
-        "user" -> JsonSource.readUser(spark, base)
-      ).foreach { case (name, df) =>
-        df.coalesce(1).write.mode("overwrite").parquet(s"$parquetRoot/$name")
+      val source = FileJsonTableSource(base)
+      Seq(Pin, Geo, User).foreach { t =>
+        source.readBatch(spark, t).coalesce(1)
+          .write.mode("overwrite").parquet(s"$parquetRoot/${t.name}")
       }
       rawLanded = true
     }
@@ -89,9 +87,10 @@ object PipelineParity {
       val base = ensureFixtures()
       landRawParquet(spark, base)
       import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      (Clean.pin(JsonSource.readPin(spark, base)).persist(MEMORY_AND_DISK),
-        Clean.geo(JsonSource.readGeo(spark, base)).persist(MEMORY_AND_DISK),
-        Clean.user(JsonSource.readUser(spark, base)).persist(MEMORY_AND_DISK))
+      val source = FileJsonTableSource(base)
+      (Clean.pin(source.readBatch(spark, Pin)).persist(MEMORY_AND_DISK),
+        Clean.geo(source.readBatch(spark, Geo)).persist(MEMORY_AND_DISK),
+        Clean.user(source.readBatch(spark, User)).persist(MEMORY_AND_DISK))
     })
 
   // ---- DuckDB mirror of the cleaning chain (Clean.pin/geo/user) -------

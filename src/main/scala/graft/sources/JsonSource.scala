@@ -1,6 +1,5 @@
 package graft.sources
 
-import graft.pipeline.Schemas
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -15,18 +14,13 @@ import org.apache.spark.sql.types.StructType
   */
 object JsonSource {
 
+  /** Every partition file of one landed topic. */
+  private[sources] def topicGlob(baseDir: String, topic: String): String =
+    s"$baseDir/topics/$topic/partition=*"
+
   def readTopic(spark: SparkSession, baseDir: String, topic: String,
       schema: StructType): DataFrame =
-    spark.read.schema(schema).json(s"$baseDir/topics/$topic/partition=*")
-
-  def readPin(spark: SparkSession, baseDir: String, topicPrefix: String = ""): DataFrame =
-    readTopic(spark, baseDir, topicPrefix + "pin", Schemas.rawPin)
-
-  def readGeo(spark: SparkSession, baseDir: String, topicPrefix: String = ""): DataFrame =
-    readTopic(spark, baseDir, topicPrefix + "geo", Schemas.rawGeo)
-
-  def readUser(spark: SparkSession, baseDir: String, topicPrefix: String = ""): DataFrame =
-    readTopic(spark, baseDir, topicPrefix + "user", Schemas.rawUser)
+    spark.read.schema(schema).json(topicGlob(baseDir, topic))
 
   /** Robustness variant: PERMISSIVE read that quarantines malformed
     * lines into `_corrupt_record` instead of nulling them silently —
@@ -41,5 +35,5 @@ object JsonSource {
       .schema(schema.add("_corrupt_record", org.apache.spark.sql.types.StringType))
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(s"$baseDir/topics/$topic/partition=*")
+      .json(topicGlob(baseDir, topic))
 }

@@ -37,7 +37,7 @@ final case class FileJsonTableSource(baseDir: String, topicPrefix: String = "")
     JsonSource.readTopic(spark, baseDir, topicPrefix + table.name, table.schema)
   override def readStream(spark: SparkSession, table: PipelineTable): DataFrame =
     spark.readStream.schema(table.schema)
-      .json(s"$baseDir/topics/$topicPrefix${table.name}/partition=*")
+      .json(JsonSource.topicGlob(baseDir, topicPrefix + table.name))
 }
 
 /** S3/S8 — Kafka-shaped source: one topic per table, earliest offsets

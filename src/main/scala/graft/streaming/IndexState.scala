@@ -4,8 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** At-rest APPEND-ONLY index state for the streaming ingest twins — the
-  * shared state layer behind [[StreamPipeline.dedupIndexBatch]],
-  * [[StreamPipeline.dhashIndexBatch]] and
+  * shared state layer behind [[StreamPipeline.dedupIndexBatch]] and
   * [[StreamPipeline.splitIndexBatch]] (r16 weak item: those twins
   * re-read the ENTIRE committed index every micro-batch and rebuilt
   * the bloom gate from it, so per-batch cost grew linearly with the
@@ -38,8 +37,9 @@ import org.apache.spark.sql.functions._
   *     sidecar write) HEALS on read: its filter is rebuilt from that
   *     ONE dir's rows — bounded by a single batch — and persisted
   *     back, so the torn window never grows. Decontamination's
-  *     fold-once blocklist bloom (`decontaminateStream`) is the same
-  *     pattern for static state; this is its incremental form.
+  *     fold-once blocklist bloom ([[graft.operators.Dedup
+  *     .decontaminateBloom]]) is the same pattern for static state;
+  *     this is its incremental form.
   *
   * Elements are 64-bit longs, pre-hashed by the element derivations
   * below so the probe side can compute the IDENTICAL expression
@@ -59,21 +59,6 @@ object IndexState {
     * xxhash64(content_hash). */
   def dedupElems(idx: DataFrame): DataFrame =
     idx.select(xxhash64(col("h")).as("_e"))
-
-  /** [[StreamPipeline.dhashIndexBatch]] index (`h BIGINT` perceptual
-    * hashes): the pigeonhole (chunk index, chunk value) keys of
-    * [[graft.operators.Dedup.dedupIncrementalHamming]] — maxHamming+1
-    * elements per signature. */
-  def dhashElems(maxHamming: Int)(idx: DataFrame): DataFrame = {
-    val chunks = maxHamming + 1
-    val bitsPer = 64 / chunks
-    val cs = (0 until chunks).map { i =>
-      shiftrightunsigned(col("h").cast("long"), i * bitsPer)
-        .bitwiseAND(lit((1L << bitsPer) - 1))
-    }
-    idx.select(posexplode(array(cs: _*)))
-      .select(xxhash64(col("pos"), col("col")).as("_e"))
-  }
 
   /** [[StreamPipeline.splitIndexBatch]] index (doc_id, side, hs,
     * bands): doc ids salted with -1 (the stickiness probe — band

@@ -4,7 +4,6 @@ import graft.pipeline.{Clean, Schemas}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
 
 /** Structured-Streaming twin of the batch pipeline (SURVEY.md §2.9).
   *
@@ -12,10 +11,12 @@ import org.apache.spark.sql.types.StructType
   * `data` column with from_json over a declared struct, applies the SAME
   * cleaning functions as batch, and appends to checkpointed tables
   * (`Kinesis_Processing.ipynb`). OSS Spark has no Kinesis source, so the
-  * source is any streaming DataFrame with a `value` column (Kafka's
-  * wire shape; file/memory sources in tests) — semantics preserved:
+  * source is any [[graft.sources.TableSource]] stream in the raw table
+  * shape (landed JSON files, or Kafka records through
+  * [[graft.sources.KafkaTableSource.decode]]) — semantics preserved:
   * earliest-offset JSON records, stateless map-only transforms,
-  * append-mode sink.
+  * append-mode sink. [[graft.run.StreamMain]] composes the three
+  * queries.
   *
   * Design fix carried from SURVEY §2.9 S5: the reference shares ONE
   * checkpoint dir across its three queries (Kinesis_Processing.ipynb
@@ -23,13 +24,6 @@ import org.apache.spark.sql.types.StructType
   * checkpoint path from its query name.
   */
 object StreamPipeline {
-
-  /** S4 — deserialize: binary/string `value` → from_json(declared
-    * struct) → flatten (`create_dataframe`, Kinesis_Processing.ipynb
-    * :701-712). */
-  def deserialize(raw: DataFrame, schema: StructType): DataFrame =
-    raw.select(from_json(col("value").cast("string"), schema).as("our_data"))
-      .select("our_data.*")
 
   /** ST4 — cross-stream pollution guard then table-specific cleaning;
     * identical Clean.* code path as batch (ST3). */
@@ -54,167 +48,12 @@ object StreamPipeline {
       .trigger(trigger)
       .start()
 
-  /** Streaming exact-dedup with keyed state (extension — the reference
-    * is append-only/stateless): first occurrence of each content hash
-    * passes through, replays/duplicates are dropped. State is one
-    * boolean per hash via flatMapGroupsWithState; at scale, pair with
-    * watermark-based state TTL (GroupStateTimeout) so state doesn't grow
-    * unboundedly — here timeout is left NoTimeout for replay-exactness.
-    * Emits (hash, serialized row) pairs; callers re-expand downstream. */
-  def dedupStream(rows: org.apache.spark.sql.Dataset[(Long, String)])
-      : org.apache.spark.sql.Dataset[(Long, String)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = rows.sparkSession
-    import spark.implicits._
-    rows.groupByKey(_._1)
-      .flatMapGroupsWithState[Boolean, (Long, String)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (key, it, state: GroupState[Boolean]) =>
-          if (state.exists) Iterator.empty
-          else {
-            state.update(true)
-            it.take(1).map { case (_, payload) => (key, payload) }
-          }
-      }
-  }
-
-  /** [[dedupStream]] with BOUNDED state — the form that survives an
-    * unbounded key domain (at 100 TB/day of crawl the distinct-hash
-    * state of the exact variant grows forever; this one's is O(keys
-    * inside the watermark window)). Built on the engine's own
-    * watermark-evicted dedup operator (`dropDuplicatesWithinWatermark`,
-    * state cleanup handled by Structured Streaming itself — no
-    * hand-rolled timeout bookkeeping to get wrong).
-    *
-    * Exactness contract (documented, deliberate): the FIRST arrival of
-    * each content hash is emitted, and any replay whose event time is
-    * within `delay` of a previous arrival of the same hash is dropped —
-    * i.e. emissions are identical to [[dedupStream]] for every
-    * duplicate that arrives inside the watermark window. A replay
-    * arriving LATER than `delay` past the watermark may re-emit (its
-    * state was reclaimed); downstream exact-dedup at rest (q130's
-    * incremental discipline) catches that tail. Rows are
-    * (content hash, event time, payload). */
-  def dedupStreamBounded(
-      rows: org.apache.spark.sql.Dataset[(Long, java.sql.Timestamp, String)],
-      delay: String): org.apache.spark.sql.Dataset[(Long, String)] = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    rows.toDF("hash", "ts", "payload")
-      .withWatermark("ts", delay)
-      .dropDuplicatesWithinWatermark("hash")
-      .select(col("hash"), col("payload"))
-      .as[(Long, String)]
-  }
-
-  /** Streaming funnel conversion — q143's stream twin: per-user state
-    * machine tracking the earliest signup instant and the first
-    * purchase at-or-after it, emitting an updated
-    * `(user, signup_us, first_purchase_us | -1)` record whenever the
-    * pair changes (so the LATEST emission per user equals the batch
-    * answer on the same events, under ANY micro-batch split or
-    * within-user arrival order).
-    *
-    * Out-of-order safety without unbounded buffering: the only replay
-    * hazard is a purchase arriving BEFORE an earlier-timestamped
-    * signup. Purchases at-or-after the current signup candidate
-    * collapse into one µs (their min); only purchases strictly before
-    * it are retained individually, because a yet-earlier signup could
-    * retroactively qualify them. Pre-signup purchases are rare by
-    * funnel construction, so state per user is O(pre-signup purchases);
-    * for streams where that bound does not hold (purchases with no
-    * signup ever), use [[funnelStreamBounded]], whose watermark prunes
-    * the buffer without changing any emission. Events inside one batch
-    * are processed in (us, type) order so batch-boundary placement
-    * never changes the fold. */
-  def funnelStream(events: org.apache.spark.sql.Dataset[(Long, String, Long)])
-      : org.apache.spark.sql.Dataset[(Long, Long, Long)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long, List[Long]), (Long, Long, Long)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (user, it, state: GroupState[(Long, Long, List[Long])]) =>
-          funnelStep(user, it.map(e => (e._2, e._3)), state, Long.MinValue)
-      }
-  }
-
-  // state: (signupUs | MaxValue, qualPurchaseUs | MaxValue, purchases < signupUs)
-  private[graft] val FunnelNone = Long.MaxValue
-
-  /** One funnel state-machine step: fold this batch's (type, us) events
-    * (sorted by (us, type) so batch-boundary placement never changes
-    * the result) into the state, then prune pre-signup purchases older
-    * than `wmUs`. The prune is EXACT under the watermark contract: a
-    * purchase at t only ever qualifies for a signup s <= t, and no
-    * event with time < wmUs will be delivered, so a buffered purchase
-    * with t < wmUs can never be claimed by any future signup. */
-  private[graft] def funnelAdvance(
-      s0: (Long, Long, List[Long]),
-      events: Seq[(String, Long)],
-      wmUs: Long): (Long, Long, List[Long]) = {
-    val folded = events.sortBy(e => (e._2, e._1)).foldLeft(s0) {
-      case ((su, qu, pre), ("signup", t)) if t < su =>
-        val (now, still) = pre.partition(_ >= t)
-        (t, (qu :: now).min, still)
-      case ((su, qu, pre), ("purchase", t)) =>
-        if (t >= su) (su, math.min(qu, t), pre)
-        else (su, qu, t :: pre)
-      case (s, _) => s
-    }
-    (folded._1, folded._2, folded._3.filter(_ >= wmUs))
-  }
-
-  /** Shared update+emit wrapper around [[funnelAdvance]]. */
-  private def funnelStep(user: Long, events: Iterator[(String, Long)],
-      state: org.apache.spark.sql.streaming.GroupState[(Long, Long, List[Long])],
-      wmUs: Long): Iterator[(Long, Long, Long)] = {
-    val s0 = state.getOption.getOrElse((FunnelNone, FunnelNone, List.empty[Long]))
-    val folded = funnelAdvance(s0, events.toSeq, wmUs)
-    state.update(folded)
-    val changed = (folded._1, folded._2) != (s0._1, s0._2)
-    if (changed && folded._1 != FunnelNone)
-      Iterator((user, folded._1,
-        if (folded._2 == FunnelNone) -1L else folded._2))
-    else Iterator.empty
-  }
-
-  /** [[funnelStream]] with BOUNDED per-user state — the production
-    * variant paired with a watermark, closing the gap where a user
-    * with purchases but no signup grows the pre-signup buffer forever.
-    * `lateness` is a calendar-interval string (e.g. "10 minutes"):
-    * events arriving with event time older than `max seen - lateness`
-    * may be dropped by the engine, and under exactly that contract the
-    * pre-signup buffer prunes to `t >= watermark` without changing any
-    * emission (see [[funnelAdvance]]). State per user is then
-    * O(purchases inside the lateness window), not O(stream age). */
-  def funnelStreamBounded(
-      events: org.apache.spark.sql.Dataset[(Long, String, Long)],
-      lateness: String)
-      : org.apache.spark.sql.Dataset[(Long, Long, Long)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.toDF("user", "etype", "us")
-      .withColumn("ts", timestamp_micros(col("us")))
-      .withWatermark("ts", lateness)
-      .as[(Long, String, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long, List[Long]), (Long, Long, Long)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (user, it, state: GroupState[(Long, Long, List[Long])]) =>
-          funnelStep(user, it.map(e => (e._2, e._3)), state,
-            state.getCurrentWatermarkMs() * 1000L)
-      }
-  }
-
-  /** Streaming ingest dedup against an AT-REST hash index — the
-    * production twin of [[dedupStream]]: instead of unbounded keyed
-    * executor state (one entry per content hash ever seen), the dedup
-    * state lives in parquet. Per micro-batch (foreachBatch):
-    * read the index, run [[graft.operators.Dedup.dedupIncremental]]
-    * (within-batch keepers + bloom-gated index anti-join), land
+  /** Streaming ingest dedup against an AT-REST hash index: instead of
+    * unbounded keyed executor state (one entry per content hash ever
+    * seen), the dedup state lives in parquet. Per micro-batch
+    * (foreachBatch): read the index, run
+    * [[graft.operators.Dedup.dedupIncremental]] (within-batch keepers +
+    * bloom-gated index anti-join), land
     * survivors AND their hashes through [[IdempotentSink]]'s
     * batch=<id> + _SUCCESS discipline. A replayed batch (foreachBatch
     * is at-least-once) skips both writes on its markers — exactly-once
@@ -240,10 +79,10 @@ object StreamPipeline {
   // so every batch's filter merges; matches dedupIncremental's
   // defaults). Size `bloomItems` for the landed ELEMENT count over the
   // stream's life, counting element multiplicity — one per doc for the
-  // dedup twin, maxHamming+1 per signature for the dhash twin, 1+bands
-  // per doc for the split twin — else the folded filter saturates, the
-  // zero-positive fast paths stop firing, and per-batch cost silently
-  // reverts to index-scan joins (correctness unaffected; the
+  // dedup twin, 1+bands per doc for the split twin — else the folded
+  // filter saturates, the zero-positive fast paths stop firing, and
+  // per-batch cost silently reverts to index-scan joins (correctness
+  // unaffected; the
   // [[graft.streaming.IndexState.currentBloom]] saturation WARN is the
   // signal, and a mid-stream re-size migrates at the next compaction).
   val IndexBloomItems = 1000000L
@@ -328,129 +167,25 @@ object StreamPipeline {
     clock.publish(indexBase, batchId)
   }
 
-  /** Streaming IMAGE ingest dedup against an at-rest signature index —
-    * the perceptual-hash twin of [[dedupStreamWithIndex]]: per
-    * micro-batch, decode + dHash the image payloads
-    * ([[graft.operators.Multimodal.dHashImages]]), drop within-batch
-    * near-dups and anything within `maxHamming` of an indexed
-    * signature ([[graft.operators.Dedup.dedupIncrementalHamming]] —
-    * banded index join, bloom short-circuit), then land survivors AND
-    * their signatures through [[IdempotentSink]]'s marker discipline.
-    * Same crash contract as the text twin: survivors commit BEFORE
-    * signatures, replays skip on markers, the index is shared at-rest
-    * state with zero executor memory between batches.
+  /** One micro-batch of the streaming twin of [[graft.operators
+    * .CorpusPrep.leakageSafeSplitIncremental]] — sticky train/test
+    * assignment AT INGEST, against the accumulated assignment state.
+    * Same append-only contract as the batch form: landed sides never
+    * move; a new doc adopts its near-dup component's side; all-new
+    * components take the hash-of-root side; a doc whose component
+    * touches BOTH landed sides quarantines — and quarantined state
+    * POISONS both flags, so later near-dups of a quarantined doc
+    * quarantine too. Replays skip on the [[IdempotentSink]] markers
+    * (the [[dedupIndexBatch]] discipline).
     *
-    * MODALITY-AGNOSTIC: everything downstream of the hash operates on
-    * the (id, dhash) shape, so `hasher` swaps the decode+hash front
-    * end — [[graft.operators.Multimodal.dHashImages]] (default),
-    * `audioDHashWavs` (q159's spectral hash), `videoDHashY4m` (q162's
-    * temporal hash) — without touching the index, bloom, banding, or
-    * marker machinery. */
-  def dhashStreamDedup(images: DataFrame, idCol: String,
-      outBase: String, indexBase: String, maxHamming: Int = 3,
-      hasher: (DataFrame, String) => DataFrame =
-        graft.operators.Multimodal.dHashImages,
-      maxIndexDirs: Int = 64,
-      bloomItems: Long = IndexBloomItems, bloomBits: Long = IndexBloomBits)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    images.writeStream
-      .option("checkpointLocation", s"$outBase/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dhashIndexBatch(batch, batchId, idCol, outBase, indexBase, maxHamming,
-          hasher, maxIndexDirs, bloomItems, bloomBits)
-      }
-      .start()
-
-  /** One micro-batch of [[dhashStreamDedup]] — named so replay and
-    * crash-between-writes scenarios are directly testable. Same flat
-    * state discipline as [[dedupIndexBatch]]: sidecar-folded bloom
-    * (elements = the pigeonhole chunk keys), zero-candidate fast path
-    * inside [[graft.operators.Dedup.dedupIncrementalHamming]], and
-    * generation compaction of the signature index. */
-  def dhashIndexBatch(batch: DataFrame, batchId: Long, idCol: String,
-      outBase: String, indexBase: String, maxHamming: Int,
-      hasher: (DataFrame, String) => DataFrame =
-        graft.operators.Multimodal.dHashImages,
-      maxIndexDirs: Int = 64,
-      bloomItems: Long = IndexBloomItems,
-      bloomBits: Long = IndexBloomBits): Unit = {
-    val spark = batch.sparkSession
-    val clock = new PhaseClock("dhash")
-    import clock.timed
-    val index = IndexState.read(spark, indexBase, "h BIGINT")
-    val bloom = timed("fold")(IndexState.currentBloom(spark, indexBase,
-      IndexState.dhashElems(maxHamming), bloomItems, bloomBits))
-    val sigs = hasher(batch, idCol)
-    val survivors = graft.operators.Dedup.dedupIncrementalHamming(
-      sigs, idCol, "dhash", index, "h", maxHamming,
-      bloomItems, bloomBits, precomputedBloom = bloom)
-    timed("write")(IdempotentSink.writeBatch(outBase)(survivors, batchId))
-    // index rows from the COMMITTED output, not the live plan — the
-    // survivors DAG (decode + hash + banded join) would otherwise
-    // evaluate twice per batch; the committed dir's bytes bound the
-    // index append's file sizing
-    val outDir = s"$outBase/batch=$batchId"
-    timed("append")(IndexState.append(
-      spark.read.parquet(outDir).select(col("dhash").as("h")),
-      batchId, indexBase, IndexState.dhashElems(maxHamming),
-      bloomItems, bloomBits,
-      estBytes = IndexState.dataBytes(spark, outDir)))
-    timed("compact")(
-      if (IndexState.shouldCompact(spark, indexBase, maxIndexDirs))
-        IndexState.compact(spark, indexBase, IndexState.dhashElems(maxHamming),
-          bloomItems, bloomBits))
-    clock.publish(indexBase, batchId)
-  }
-
-  /** Streaming ingest twin of [[graft.operators.CorpusPrep
-    * .leakageSafeSplitIncremental]] — sticky train/test assignment AT
-    * INGEST: each micro-batch of new documents gets its side the
-    * moment it lands, against the accumulated assignment state, so
-    * the published split is always current (the nightly batch form
-    * stays the corpus-global reference). Same append-only contract:
-    * landed sides never move; a new doc adopts its near-dup
-    * component's side; all-new components take the hash-of-root side;
-    * a doc whose component touches BOTH landed sides quarantines —
-    * and quarantined state POISONS both flags, so later near-dups of
-    * a quarantined doc quarantine too (they are transitively in reach
-    * of both sides), matching what the batch closure would decide.
-    *
-    * State at rest (indexBase, parquet batch=N dirs under the
-    * [[IdempotentSink]] marker discipline): one row per landed doc —
-    * (doc_id, side, hs, bands) — so the per-batch candidate join is a
-    * band-key equi-join against stored keys (no index re-hashing),
-    * exactly the [[dedupStreamWithIndex]] shape. Components span
-    * batch ∪ TOUCHED index nodes (two batch docs sharing an index
-    * neighbor must merge even without a direct batch-batch pair — the
-    * batch closure's behavior). The index probe takes the same bloom
-    * gate as [[graft.operators.Dedup.dedupIncremental]], folded from
-    * the at-rest `_bloom` sidecars ([[IndexState]]); per-batch work is
-    * batch-sized plus touched index rows, and the index dirs compact
-    * into generations so the state read stays flat in stream age.
-    *
-    * Stream == batch caveat (shared with [[dedupStreamWithIndex]]):
-    * the fresh-component hash side uses the component root visible at
-    * arrival; identity with the one-shot batch split holds when first
-    * arrivals carry component-minimum ids (the planted-spec
-    * convention) — the leakage-safety and stickiness invariants hold
-    * under ANY arrival order. */
-  def splitStreamWithIndex(docs: DataFrame, idCol: String, textCol: String,
-      outBase: String, indexBase: String, testPct: Int = 10,
-      shingleSize: Int = 3, numHashes: Int = 32, bands: Int = 8,
-      threshold: Double = 0.5, maxIndexDirs: Int = 64,
-      bloomItems: Long = IndexBloomItems, bloomBits: Long = IndexBloomBits)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", s"$outBase/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        splitIndexBatch(batch, batchId, idCol, textCol, outBase, indexBase,
-          testPct, shingleSize, numHashes, bands, threshold, maxIndexDirs,
-          bloomItems, bloomBits)
-      }
-      .start()
-
-  /** One micro-batch of [[splitStreamWithIndex]] — named for direct
-    * replay/identity testing (the [[dedupIndexBatch]] discipline).
+    * State at rest (indexBase, parquet batch=N dirs): one row per
+    * landed doc — (doc_id, side, hs, bands) — so the candidate join is
+    * a band-key equi-join against stored keys. Components span batch ∪
+    * TOUCHED index nodes (two batch docs sharing an index neighbor must
+    * merge even without a direct batch-batch pair). Identity with the
+    * one-shot batch split holds when first arrivals carry
+    * component-minimum ids; leakage safety and stickiness hold under
+    * ANY arrival order.
     *
     * Flat per-batch state cost (r16 weak item): the index's `_bloom`
     * sidecar fold ([[IndexState]]) carries BOTH probe domains — landed
@@ -710,227 +445,6 @@ object StreamPipeline {
     clock.publish(indexBase, batchId)
   }
 
-  /** Streaming MinHash-LSH near-dup candidates — the incremental twin
-    * of `Dedup.minhashCandidatePairs`'s banded join. Signatures and
-    * band hashes are the SAME stateless per-row expressions as batch;
-    * the bucket join becomes keyed state: one id list per (band, hash)
-    * bucket, and each arriving doc pairs against the bucket's existing
-    * members (so a near-dup is flagged the micro-batch its twin
-    * arrives, not at the next nightly run). State per bucket is capped
-    * at `bucketCap` ids — a degenerate bucket (boilerplate band) stops
-    * accumulating and stars new arrivals to its representative
-    * (min id seen), the same skew escape as the batch operator; with a
-    * cold cap the emitted pair SET equals the batch candidate set
-    * (asserted in tests). At scale, add watermark-based state TTL the
-    * same way [[dedupStream]] documents. Downstream verifies candidates
-    * (exact Jaccard vs the stored texts) exactly as in batch. */
-  def minhashCandidatesStream(
-      docs: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      bucketCap: Int = 4096): DataFrame = {
-    import graft.functions.{TextFunctions => T}
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(
-        col(idCol).cast("long").as("id"),
-        posexplode(T.bandHashes(
-          T.minhashSignature(T.shingleHashes(col(textCol), shingleSize), numHashes),
-          numHashes, bands)))
-      .select(col("id"), col("pos").as("band"), col("col").as("bh"))
-      .as[(Long, Int, Long)]
-      .groupByKey { case (_, band, bh) => (band, bh) }
-      // state = (minId, members): the representative is tracked
-      // SEPARATELY from the capped member list, so an id smaller than
-      // every stored member arriving AFTER the cap still becomes the
-      // bucket's representative — `members.min` alone would freeze the
-      // rep at the min of the first `bucketCap` arrivals and diverge
-      // from the batch capped-regime semantics (star to min id seen).
-      .flatMapGroupsWithState[(Long, List[Long]), (Long, Long)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (_, rows, state) =>
-          val (seenMin, seen) = state.getOption.getOrElse((Long.MaxValue, Nil))
-          val incoming = rows.map(_._1).toSeq.distinct.sorted
-            .filterNot(seen.contains)
-          val out = List.newBuilder[(Long, Long)]
-          var acc = seen
-          var minId = seenMin
-          for (n <- incoming) {
-            if (acc.size < bucketCap) {
-              acc.foreach(s => out += ((math.min(s, n), math.max(s, n))))
-              acc = n :: acc
-            } else if (minId != n) {
-              out += ((math.min(minId, n), math.max(minId, n)))
-            }
-            minId = math.min(minId, n)
-          }
-          state.update((minId, acc))
-          out.result().iterator
-      }
-      .toDF("id_a", "id_b")
-  }
-
-  /** Optional extension (SURVEY §2.9 ST6 — absent in the reference):
-    * watermarked event-time tumbling-window counts per country —
-    * bounded state (windows evict once the watermark passes). */
-  def windowedCountryCounts(cleanedGeo: DataFrame): DataFrame =
-    cleanedGeo.withWatermark("timestamp", "1 hour")
-      .groupBy(window(col("timestamp"), "1 day"), col("country"))
-      .agg(count(lit(1)).as("events"))
-
-  /** ST6 extension — watermark-bounded streaming dedup via the native
-    * `dropDuplicatesWithinWatermark`: unlike [[dedupStream]] (exact
-    * forever, state grows with distinct keys), state here is EVICTED
-    * once the watermark passes an entry — the right default for replay
-    * suppression where duplicates arrive close together (at-least-once
-    * producers), with state bounded by delay × rate. */
-  def dedupWithinWatermark(events: DataFrame, tsCol: String,
-      keyCols: Seq[String], delay: String = "1 hour"): DataFrame =
-    events.withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark(keyCols)
-
-  /** ST6 extension — stream enrichment against a static dimension: a
-    * broadcast hash join per micro-batch. No streaming state at all —
-    * the dimension is rebroadcast per batch, so at scale this is the
-    * standard map-side enrich (geo/user lookup tables, blocklists). */
-  def enrichWithDim(stream: DataFrame, dim: DataFrame, key: String): DataFrame =
-    stream.join(broadcast(dim), Seq(key), "left")
-
-  /** ST6 extension — STREAMING decontamination: the streaming twin of
-    * [[graft.operators.Dedup.decontaminateBloom]]. The blocklist is
-    * STATIC (eval sets change per release, not per micro-batch): its
-    * normalized-content hashes fold ONCE into a bloom filter on the
-    * driver before the query starts; each streamed row then tests the
-    * broadcast bits map-side, and definite negatives — almost the whole
-    * stream — pass through with no join at all. Bloom-positives (true
-    * matches plus the fpp sliver) are corrected by a stream-static
-    * LEFT ANTI join, so the kept set equals the batch operator's
-    * exactly, for ANY filter size. Fully stateless: no watermark, no
-    * state store — safe under replay because dropping is deterministic
-    * per row. Scale note: the anti join's static side is the full
-    * blocklist, but only bloom-positive rows reach it, so the per-batch
-    * join input is tiny regardless of stream rate. */
-  def decontaminateStream(corpus: DataFrame, textCol: String,
-      blocklist: DataFrame, blTextCol: String,
-      expectedItems: Long = 1000000L, numBits: Long = 1L << 23): DataFrame = {
-    import graft.functions.{TextFunctions => T}
-    import org.apache.spark.sql.graft.shim
-    val bl = blocklist
-      .select(md5(T.normalizeText(col(blTextCol))).as("_block_hash"))
-      .distinct()
-    val bloomBytes = bl.select(shim.column(
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          shim.expression(xxhash64(col("_block_hash"))),
-          shim.expression(lit(expectedItems)), shim.expression(lit(numBits)))
-          .toAggregateExpression()).as("_bf"))
-      .head().getAs[Array[Byte]]("_bf")
-    if (bloomBytes == null) return corpus // empty blocklist: nothing to drop
-    val bloomF = graft.functions.BloomProbe.deserialize(bloomBytes)
-    def mightContain(h: org.apache.spark.sql.Column) =
-      graft.functions.BloomProbe(bloomF, xxhash64(h))
-    val hashed = corpus.withColumn("_block_hash", md5(T.normalizeText(col(textCol))))
-    hashed.filter(!mightContain(col("_block_hash")))
-      .unionByName(
-        hashed.filter(mightContain(col("_block_hash")))
-          .join(bl, Seq("_block_hash"), "left_anti"))
-      .drop("_block_hash")
-  }
-
-  /** ST6 extension — stream-stream interval join: each left event pairs
-    * with right events of the same key whose time is within
-    * `[leftTs - matchWindow, leftTs]`. Watermarks on BOTH sides let the
-    * state store evict (state bounded by window+lateness × rate, not by
-    * stream length). `lateness` is the independent out-of-orderness
-    * tolerance: rows older than the watermark are DROPPED as late
-    * input, so it must cover the sources' real skew — including one
-    * source's batches racing ahead of the other's — while `matchWindow`
-    * stays the semantic pairing window. Column names must be disjoint. */
-  def streamIntervalJoin(
-      left: DataFrame, right: DataFrame,
-      leftKey: String, rightKey: String,
-      leftTs: String, rightTs: String,
-      matchWindow: String = "1 hour",
-      lateness: Option[String] = None): DataFrame = {
-    val wm = lateness.getOrElse(matchWindow)
-    val l = left.withWatermark(leftTs, wm)
-    val r = right.withWatermark(rightTs, wm)
-    l.join(r,
-      col(leftKey) === col(rightKey) &&
-        col(rightTs) >= col(leftTs) - expr(s"INTERVAL $matchWindow") &&
-        col(rightTs) <= col(leftTs))
-  }
-
-  /** ST6 extension — streaming sessionization via the native
-    * `session_window` (dynamic-gap event-time windows): the streaming
-    * twin of [[graft.operators.Sessionize]]. The watermark both bounds
-    * state (sessions close once the watermark passes their end) and
-    * makes output append-mode-final; per-key ordering is handled by the
-    * session-merge state store, so no per-key global sort exists —
-    * exactly the property that makes this the STREAMING answer to the
-    * hot-key problem the batch bucketed variant solves. */
-  def sessionizedCounts(events: DataFrame, tsCol: String, keyCol: String,
-      gap: String = "30 minutes", watermark: String = "1 hour"): DataFrame =
-    events.withWatermark(tsCol, watermark)
-      .groupBy(session_window(col(tsCol), gap), col(keyCol))
-      .agg(count(lit(1)).as("n_events"))
-      .select(
-        col(keyCol),
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("n_events"))
-
-  /** Streaming twin of q128's gap-fill + linear interpolation
-    * ([[graft.operators.GapFill]] — SAME definition, so the two cannot
-    * drift). Interpolation needs a user's whole observed series (the
-    * bracketing neighbors of a gap can arrive batches apart), so the
-    * incremental unit is the USER, not the row. Per micro-batch:
-    *
-    *  1. the batch's (user, day) cent deltas append to parquet state
-    *     (`stateBase`, [[IdempotentSink]] batch=N + _SUCCESS — the
-    *     daily-grain aggregate, far smaller than the event stream);
-    *  2. the merged committed state is re-aggregated for ONLY the
-    *     users this batch touched (a semi join — untouched users cost
-    *     nothing), and their full series is re-derived and landed
-    *     under `outBase/batch=N`.
-    *
-    * State commits BEFORE output: a crash between the two replays into
-    * a deterministic recompute from committed state (the state write
-    * skips on its marker), never a stale-output/fresh-state split.
-    * The current answer for a user is their series from the HIGHEST
-    * batch that touched them — [[latestSeries]] is that read-side
-    * resolve. Per-batch cost scales with touched users' spans, not
-    * with total state; at 100 TB the daily state is compacted by the
-    * same read-side aggregate every batch performs, and cold users
-    * never re-shuffle. */
-  def interpolateDailyStream(events: DataFrame,
-      stateBase: String, outBase: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", s"$outBase/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        interpolateDailyBatch(batch, batchId, stateBase, outBase)
-      }
-      .start()
-
-  /** One micro-batch of [[interpolateDailyStream]] — named so replay
-    * and crash-between-writes scenarios are directly testable. */
-  def interpolateDailyBatch(batch: DataFrame, batchId: Long,
-      stateBase: String, outBase: String): Unit = {
-    val spark = batch.sparkSession
-    val delta = graft.operators.GapFill.dailyPurchases(batch)
-    IdempotentSink.writeBatch(stateBase)(delta, batchId)
-    // merged committed state (now including this batch; identical on
-    // replay because the skipped re-write leaves the same dirs)
-    val committed = IdempotentSink.committedDirs(spark, stateBase)
-    val merged = spark.read.parquet(committed: _*)
-      .groupBy(col("user_id"), col("day"))
-      .agg(sum(col("v")).as("v"))
-    val touched = delta.select(col("user_id")).distinct()
-    val series = graft.operators.GapFill.interpolateDaily(
-      merged.join(touched, Seq("user_id"), "left_semi"))
-    IdempotentSink.writeBatch(outBase)(series, batchId)
-  }
-
   /** Streaming incremental rollup — q147's twin: maintain an additive
     * materialized aggregate from a stream without ever re-reading
     * history. Per micro-batch (foreachBatch), the batch collapses to a
@@ -950,62 +464,6 @@ object StreamPipeline {
     IdempotentSink.writeBatch(gen)(
       graft.operators.Rollup.partial(batch, keys, sums), batchId)
     foldIfSuperseded(spark, stateBase, gen, batchId)
-  }
-
-  /** Streaming inverted-index maintenance — q169's batch merge as a
-    * foreachBatch pipeline: each micro-batch writes its OWN
-    * vocabulary-grain dictionary partial (df/cf/max_tf over just that
-    * batch's documents) through [[IdempotentSink]] markers; the
-    * current dictionary is the associative fold of committed partials
-    * (df/cf additive across disjoint doc sets, max_tf a max — the
-    * exact [[graft.operators.Search.mergeIndexStats]] algebra). Text
-    * is scanned once, in the batch that carried it; replays skip on
-    * markers; the partial store is restart-shared state. Rollup's
-    * generation/compaction machinery applies unchanged if partial
-    * count ever needs bounding (same marker discipline). */
-  def postingsIndexBatch(batch: DataFrame, batchId: Long,
-      idCol: String, textCol: String, stateBase: String): Unit =
-    IdempotentSink.writeBatch(stateBase)(
-      graft.operators.Search.indexStats(batch, idCol, textCol), batchId)
-
-  /** Streaming DSIR model maintenance (the q181 discipline as a
-    * foreachBatch): each micro-batch tallies its OWN bucket stats —
-    * bucket-grain, ≤`buckets` rows per batch — and lands them through
-    * the IdempotentSink markers, so a replayed batch is a marker no-op
-    * and the model never double-counts. The documents themselves are
-    * read once, when their batch arrives. */
-  def dsirStatsBatch(batch: DataFrame, batchId: Long,
-      idCol: String, textCol: String,
-      isTarget: org.apache.spark.sql.Column, stateBase: String,
-      buckets: Int = 256, ngram: Int = 2): Unit =
-    IdempotentSink.writeBatch(stateBase)(
-      graft.operators.CorpusPrep.dsirBucketStats(
-        graft.operators.CorpusPrep.dsirFeatures(
-          batch, idCol, textCol, isTarget, buckets, ngram)), batchId)
-
-  /** The λ model as of all committed partials (an associative fold of
-    * bucket counts, then the log-ratio derivation), or None before the
-    * first commit. Score any doc set against it with
-    * [[graft.operators.CorpusPrep.dsirScore]]. */
-  def currentDsirLambda(spark: org.apache.spark.sql.SparkSession,
-      stateBase: String, buckets: Int = 256): Option[DataFrame] = {
-    val committed = IdempotentSink.committedDirs(spark, stateBase)
-    if (committed.isEmpty) None
-    else Some(graft.operators.CorpusPrep.dsirLambda(
-      spark.read.parquet(committed: _*)
-        .groupBy("b").agg(sum("cr").as("cr"), sum("ct").as("ct")),
-      buckets))
-  }
-
-  /** The dictionary as of all committed partials, or None before the
-    * first commit. */
-  def currentIndexStats(spark: org.apache.spark.sql.SparkSession,
-      stateBase: String): Option[DataFrame] = {
-    val committed = IdempotentSink.committedDirs(spark, stateBase)
-    if (committed.isEmpty) None
-    else Some(spark.read.parquet(committed: _*)
-      .groupBy("token")
-      .agg(sum("df").as("df"), sum("cf").as("cf"), max("max_tf").as("max_tf")))
   }
 
   /** Writer half of the compaction-race protocol (see [[compactRollup]]
@@ -1258,104 +716,4 @@ object StreamPipeline {
       println(s"compact-steps base=$stateBase dirs=${committed.size} " +
         phases.map { case (n, s) => f"$n=$s%.2f" }.mkString(" "))
   }
-
-  /** Read-side resolve for supersede-per-batch state/output layouts
-    * ([[interpolateDailyStream]], [[domainCapStream]]): each key's rows
-    * from the HIGHEST committed batch that touched it — later batches
-    * re-derived the key's full answer, so they supersede. Returns an
-    * empty frame of schema `ddlIfEmpty` when nothing is committed. */
-  def latestPerKey(spark: org.apache.spark.sql.SparkSession,
-      base: String, keyCol: String, ddlIfEmpty: String): DataFrame = {
-    val committed = IdempotentSink.committedDirs(spark, base)
-    if (committed.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(ddlIfEmpty))
-    val all = spark.read.option("basePath", base).parquet(committed: _*)
-    val latest = all.groupBy(col(keyCol))
-      .agg(max(col("batch")).as("batch"))
-    all.join(latest, Seq(keyCol, "batch"))
-      .drop("batch")
-  }
-
-  /** Read-side resolve for [[interpolateDailyStream]] output. */
-  def latestSeries(spark: org.apache.spark.sql.SparkSession,
-      outBase: String): DataFrame =
-    latestPerKey(spark, outBase, "user_id",
-      "user_id BIGINT, day DATE, val DOUBLE, interpolated BOOLEAN")
-
-  /** Streaming twin of [[graft.operators.CorpusPrep.domainCap]] — the
-    * per-registrable-domain document cap maintained incrementally. The
-    * batch cap is a deterministic hash-order top-k per domain, and
-    * TopK merge is associative, so the streaming form keeps, per
-    * domain, the current ≤cap kept set at rest in parquet and merges
-    * each batch's candidates into it: batch ∪ state → topK — the
-    * merged set provably equals the batch operator over all data seen
-    * (asserted in tests), independent of arrival order or batch
-    * boundaries. Per-batch cost scales with touched domains × cap,
-    * never with corpus size; untouched domains are never read
-    * ([[latestPerKey]] supersede layout, same discipline as the
-    * interpolation twin). Replay skips on the _SUCCESS marker. */
-  def domainCapStream(docs: DataFrame, urlCol: String, idCol: String,
-      cap: Int, stateBase: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", s"$stateBase/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        domainCapBatch(batch, batchId, urlCol, idCol, cap, stateBase)
-      }
-      .start()
-
-  /** One micro-batch of [[domainCapStream]] — named so replay scenarios
-    * are directly testable. */
-  def domainCapBatch(batch: DataFrame, batchId: Long,
-      urlCol: String, idCol: String, cap: Int, stateBase: String): Unit = {
-    val spark = batch.sparkSession
-    val cand = graft.operators.CorpusPrep.domainCap(batch, urlCol, idCol, cap)
-    val touched = cand.select(col("domain")).distinct()
-    val prior = latestPerKey(spark, stateBase, "domain",
-      s"domain STRING, $idCol BIGINT")
-      .join(touched, Seq("domain"), "left_semi")
-    // batch ∪ prior kept → re-cap; associativity of the TopK merge
-    // makes this equal to capping all data seen so far
-    val merged = graft.operators.CorpusPrep.capByDomain(
-      cand.unionByName(prior), idCol, cap)
-    IdempotentSink.writeBatch(stateBase)(merged, batchId)
-  }
-
-  /** Read-side resolve for [[domainCapStream]]: the current kept set. */
-  def currentKept(spark: org.apache.spark.sql.SparkSession,
-      stateBase: String, idCol: String): DataFrame =
-    latestPerKey(spark, stateBase, "domain", s"domain STRING, $idCol BIGINT")
-
-  /** Streaming margin-criterion alignment — the incremental-ingest twin
-    * of [[graft.operators.Similarity.marginMine]]: each micro-batch of
-    * (quantized) vectors mines its mutual-top-1 margin pairs against
-    * the AT-REST corpus and lands them through [[IdempotentSink]]'s
-    * batch=<id> + _SUCCESS discipline (replayed batches skip on their
-    * marker — exactly-once output). The margin definition is batch-
-    * relative by construction (the batch side IS the bounded side), so
-    * stream == per-batch batch-operator identity holds exactly and is
-    * pinned in StreamPipelineSpec. */
-  def marginMineStream(batches: DataFrame, idCol: String, vecCol: String,
-      corpus: DataFrame, corpusId: String, outBase: String,
-      k: Int = 4, marginFpMin: Long = 72090L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    batches.writeStream
-      .option("checkpointLocation", s"$outBase/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        marginMineBatch(batch, batchId, idCol, vecCol,
-          corpus, corpusId, outBase, k, marginFpMin)
-      }
-      .start()
-
-  /** One micro-batch of [[marginMineStream]] — named so replay
-    * scenarios are directly testable. */
-  def marginMineBatch(batch: DataFrame, batchId: Long,
-      idCol: String, vecCol: String,
-      corpus: DataFrame, corpusId: String, outBase: String,
-      k: Int = 4, marginFpMin: Long = 72090L): Unit =
-    IdempotentSink.writeBatch(outBase)(
-      graft.operators.Similarity.marginMine(
-        corpus, corpusId, batch, idCol, vecCol, k, marginFpMin), batchId)
 }

@@ -18,11 +18,6 @@ class TextFunctionsSpec extends SparkSpec {
     assert(one(T.tokenCount(col("t")), "one two three").getLong(0) == 3L)
   }
 
-  test("subword count splits on punctuation and digit boundaries") {
-    // hello | world | v | 2 | x
-    assert(one(T.subwordCount(col("t")), "hello-world v2x").getLong(0) == 5L)
-  }
-
   test("shingles: n-grams and the short-text degenerate case") {
     assert(one(T.shingles(col("t"), 2), "a b c").getSeq[String](0)
       == Seq("a b", "b c"))

@@ -117,7 +117,8 @@ class DedupSpec extends SparkSpec {
     assert(cc.filter(col("keep_id") === 0L).count() == 1000L,
       "all identical docs must collapse to the min-id keeper")
     // simhash path: same cap, same bound
-    val sPairs = Dedup.simhashPairs(many, "doc_id", "text", hotBucketCap = 50)
+    val sPairs = Dedup.hammingPairs(Dedup.simhashes(many, "doc_id", "text"),
+      "doc_id", "simhash", maxHamming = 3, hotBucketCap = 50)
     assert(sPairs.count() == 999L)
   }
 
@@ -133,7 +134,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhashPairs candidate banding finds exact-duplicate pair") {
-    val pairs = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3)
+    val pairs = Dedup.hammingPairs(Dedup.simhashes(docs, "doc_id", "text"),
+        "doc_id", "simhash", maxHamming = 3)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((0L, 1L)))
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L),
@@ -194,39 +196,6 @@ class DedupSpec extends SparkSpec {
       index.filter(lit(false)), "h")
       .select("doc_id").as[Long].collect().toSet
     assert(noIdx == Set(10L, 11L, 13L), s"empty-index got $noIdx")
-  }
-
-  test("dedupIncrementalHamming: within-batch keepers + Hamming-ball index drops, exact under tiny bloom") {
-    // index holds signature 0xF0; batch: id 20 within 1 bit of the index
-    // (→ drop), ids 21/22 within 1 bit of each other (→ keeper 21),
-    // id 23 far from everything (→ keeper)
-    val index = Seq(0xF0L).toDF("h")
-    val batch = Seq(
-      (20L, 0xF1L),                  // hamming 1 from indexed 0xF0 → drop
-      (21L, 0x0FF0000000000000L),    // keeper of the 21/22 pair
-      (22L, 0x0FF0000000000001L),    // hamming 1 from 21 → drop
-      (23L, 0x00000FFFF0000000L)     // far singleton → keeper
-    ).toDF("doc_id", "dhash")
-    val got = Dedup.dedupIncrementalHamming(batch, "doc_id", "dhash", index, "h", 3)
-      .select("doc_id").as[Long].collect().toSet
-    assert(got == Set(21L, 23L), s"got $got")
-    // collision-heavy bloom: popcount verify must carry the result alone
-    val tiny = Dedup.dedupIncrementalHamming(batch, "doc_id", "dhash", index, "h", 3,
-      expectedItems = 2L, numBits = 64L)
-      .select("doc_id").as[Long].collect().toSet
-    assert(tiny == Set(21L, 23L), s"tiny-bloom got $tiny")
-    // empty index: within-batch dedup only
-    val noIdx = Dedup.dedupIncrementalHamming(batch, "doc_id", "dhash",
-      index.filter(lit(false)), "h", 3)
-      .select("doc_id").as[Long].collect().toSet
-    assert(noIdx == Set(20L, 21L, 23L), s"empty-index got $noIdx")
-    // boundary: exactly maxHamming from the index drops; a far row
-    // (distant from both the index and row 30) survives
-    val edge = Seq((30L, 0xF0L ^ 7L), (31L, 0x0F0F0F0F00000000L))
-      .toDF("doc_id", "dhash")
-    val got2 = Dedup.dedupIncrementalHamming(edge, "doc_id", "dhash", index, "h", 3)
-      .select("doc_id").as[Long].collect().toSet
-    assert(got2 == Set(31L), s"boundary got $got2")
   }
 
   test("decontaminateNgrams: 13-token overlap drops, 12-token overlap survives") {
@@ -727,7 +696,8 @@ class DedupSpec extends SparkSpec {
     Dedup.minhashCandidatePairs(docs, "doc_id", "text", threshold = 0.5).collect()
     // hamming family (q37/q152: sims persist) and containment
     // (q182: postings persists)
-    Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3).collect()
+    Dedup.hammingPairs(Dedup.simhashes(docs, "doc_id", "text"),
+      "doc_id", "simhash", maxHamming = 3).collect()
     Dedup.containmentPairs(docs, "doc_id", "text", ngram = 3,
       maxDfShare = 2, minContainmentFp = 100L).collect()
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before

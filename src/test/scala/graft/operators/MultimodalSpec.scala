@@ -22,28 +22,6 @@ class MultimodalSpec extends SparkSpec {
     assert(rows(1L)._2 == "png" && rows(2L)._2 == "webp")
   }
 
-  test("decodeStub: one metadata row per payload, deterministic dims") {
-    val out = Multimodal.decodeStub(
-      Multimodal.withPayload(docs, "doc_id", "text"), "doc_id")
-    val rows = out.collect().map(m => m.doc_id -> m).toMap
-    assert(rows.size == 3)
-    assert(rows(0L).byte_len == "small payload".getBytes("UTF-8").length.toLong)
-    assert(rows.values.forall(m => m.width >= 64 && m.height >= 64))
-    // determinism: second run identical
-    val again = Multimodal.decodeStub(
-      Multimodal.withPayload(docs, "doc_id", "text"), "doc_id")
-      .collect().map(m => m.doc_id -> m).toMap
-    assert(rows == again)
-  }
-
-  test("frameSampleStub: one-to-many expansion with stride") {
-    val out = Multimodal.frameSampleStub(
-      Multimodal.withPayload(docs, "doc_id", "text"), "doc_id", everyNth = 1)
-    val perDoc = out.groupBy("doc_id").count().as[(Long, Long)].collect().toMap
-    assert(perDoc(0L) == math.max(1, "small payload".getBytes("UTF-8").length / 32))
-    assert(perDoc(1L) > perDoc(0L))
-  }
-
   test("header parsing is REAL: hand-built PNG/GIF/JPEG/WAV headers parse correctly") {
     // PNG: 8-byte signature + IHDR chunk (len, type, width=640, height=480 BE)
     val png = Array[Int](0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a,
@@ -65,27 +43,6 @@ class MultimodalSpec extends SparkSpec {
     assert(Multimodal.sniffFormat(jpeg) == "jpeg")
     assert(Multimodal.sniffFormat(wav) == "wav")
     assert(Multimodal.sniffFormat("not an image".getBytes) == "unknown")
-    assert(Multimodal.parseDimensions(png).contains((640, 480)))
-    assert(Multimodal.parseDimensions(gif).contains((320, 200)))
-    assert(Multimodal.parseDimensions(jpeg).contains((640, 480)))
-    assert(Multimodal.parseDimensions(wav).isEmpty)
-    assert(Multimodal.parseDimensions(Array[Byte](0xFF.toByte, 0xD8.toByte, 0xFF.toByte))
-      .isEmpty, "truncated JPEG must not crash")
-    // JPEG B.1.1.2: 0xFF fill bytes before a marker are legal padding
-    val jpegPadded = Array[Int](0xFF, 0xD8, 0xFF, 0xFF, 0xFF, 0xC0, 0x00, 0x0B,
-      0x08, 0x01, 0xE0, 0x02, 0x80, 0x01, 0x01, 0x11, 0x00).map(_.toByte)
-    assert(Multimodal.parseDimensions(jpegPadded).contains((640, 480)),
-      "fill bytes before SOF must not desync the marker walk")
-
-    // through the distributed decode path
-    val media = Seq((1L, png), (2L, gif), (3L, jpeg), (4L, wav))
-      .toDF("doc_id", "payload")
-    val metas = Multimodal.decodeHeaders(media, "doc_id")
-      .collect().map(m => m.doc_id -> m).toMap
-    assert(metas(1L).format == "png" && metas(1L).width == 640 && metas(1L).height == 480)
-    assert(metas(2L).format == "gif" && metas(2L).width == 320)
-    assert(metas(3L).format == "jpeg" && metas(3L).height == 480)
-    assert(metas(4L).format == "wav" && metas(4L).width == 0)
   }
 
   test("WAV chunk walk is REAL: fmt/data chunks parse; malformed inputs yield None") {
@@ -170,23 +127,6 @@ class MultimodalSpec extends SparkSpec {
     assert(math.abs(out(3L).mean_r - 64.0) < 2.0, s"jpeg mean_r ${out(3L).mean_r}")
     // junk payload: survives as a zero row, never kills the task
     assert(out(4L).width == 0 && out(4L).height == 0 && out(4L).luma_hist.sum == 0L)
-  }
-
-  test("resizeImages: REAL resize — output re-decodes at target dims, solid color preserved") {
-    val solid = encodeImage(40, 30, "png", 0x20A040, 0x20A040)
-    val media = Seq((1L, solid), (2L, "junk".getBytes("UTF-8"))).toDF("doc_id", "payload")
-    val resized = Multimodal.resizeImages(media, "doc_id", 8, 6)
-    val rows = resized.collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
-    assert(rows(2L) == null, "undecodable payload passes through as null")
-    val outBytes = rows(1L)
-    // header parse agrees with the requested target
-    assert(Multimodal.parseDimensions(outBytes).contains((8, 6)))
-    // solid color survives bilinear resample exactly
-    val back = Multimodal.decodePixels(
-      Seq((1L, outBytes)).toDF("doc_id", "payload"), "doc_id").head()
-    assert(back.width == 8 && back.height == 6)
-    assert(back.mean_r == 0x20.toDouble && back.mean_g == 0xA0.toDouble &&
-      back.mean_b == 0x40.toDouble, s"solid color must survive resize, got $back")
   }
 
   test("dHash: decode path equals the closed-form formula; near-dups cluster by group") {

@@ -273,44 +273,11 @@ class SimilaritySpec extends SparkSpec {
     assert(!keep(1L) && keep(2L), "unicode case/space variants fold")
   }
 
-  test("semanticDedup: within-cluster near-dups elect min-id keepers, brute-force parity") {
-    // 5 base directions × 12 members: members 0-2 are near-copies of the
-    // base (true semantic dups), members 3-11 are noisy enough to stay
-    // below the threshold
-    val rng = new scala.util.Random(17L)
-    val bases = Seq.fill(5)(Array.fill(16)(rng.nextGaussian().toFloat))
-    val rows: Seq[(Long, Seq[Float])] = for {
-      g <- 0 until 5
-      m <- 0 until 12
-    } yield {
-      val noise = if (m < 3) 0.005f else 0.8f
-      ((g * 12 + m).toLong,
-        bases(g).map(x => x + noise * rng.nextGaussian().toFloat).toSeq)
-    }
-    val df = rows.toDF("vec_id", "embedding")
-    val res = graft.operators.Similarity
-      .semanticDedup(df, "vec_id", "embedding", k = 5, threshold = 0.995)
-      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getBoolean(2)))).toMap
-    for (g <- 0 until 5) {
-      val ids = (0 until 3).map(m => (g * 12 + m).toLong)
-      // the three near-copies collapse to their min id
-      assert(ids.map(res(_)._1).toSet == Set(ids.min),
-        s"group $g near-copies must share keeper ${ids.min}, got ${ids.map(res(_))}")
-      assert(!res(ids.min)._2 && ids.tail.forall(res(_)._2))
-    }
-    // noisy members survive as their own keepers
-    for (g <- 0 until 5; m <- 3 until 12) {
-      val id = (g * 12 + m).toLong
-      assert(res(id) == (id, false), s"noisy member $id must not dedup")
-    }
-  }
-
   test("semanticDedup capped path: a degenerate hot cluster emits a closed-form star") {
     // all-identical embeddings — the dead-centroid nightmare: every row
-    // lands in ONE cluster. Uncapped that is n(n-1)/2 pairs; the
-    // production hotClusterCap path must emit exactly the n-1 star
-    // pairs to the min id, and the keeper output is closed-form:
-    // everyone keeps min_id.
+    // lands in ONE cluster. Uncapped that is n(n-1)/2 pairs; the capped
+    // cluster-pair path (q160) must emit exactly the n-1 star pairs to
+    // the min id.
     val n = 40
     val vec: Seq[Float] = Seq.fill(8)(1.0f)
     val df = (0 until n).map(i => (100L + i, vec)).toDF("vec_id", "embedding")
@@ -320,15 +287,6 @@ class SimilaritySpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet
     assert(pairs == (101 until 100 + n).map(i => (100L, i.toLong)).toSet,
       s"hot cluster must emit the ${n - 1}-edge star to the min id, got ${pairs.size} pairs")
-    // end-to-end pin: capped semanticDedup elects the closed-form keeper
-    val res = graft.operators.Similarity
-      .semanticDedup(df, "vec_id", "embedding", k = 2, threshold = 0.99,
-        hotClusterCap = 10)
-      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getBoolean(2)))).toMap
-    assert(res.size == n)
-    assert(res(100L) == (100L, false), "min id keeps itself")
-    for (i <- 101 until 100 + n)
-      assert(res(i.toLong) == (100L, true), s"row $i must point at the star center")
   }
 
   test("hyperplane signature: identical vectors identical, negated all-differ") {

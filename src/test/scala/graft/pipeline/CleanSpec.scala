@@ -39,21 +39,7 @@ class CleanSpec extends SparkSpec {
     assert(got(2L).contains(1000000))
     assert(got(3L).contains(854))
     assert(got(4L).isEmpty)
-    assert(got(5L).isEmpty, "the 25.5k edge must null out in strict parity mode")
-  }
-
-  test("follower_count non-strict mode scales numerically") {
-    val df = Clean.expandFollowerCount(strict = false)(rawPin(Seq(
-      pinRow(1, follower = "25.5k"),
-      pinRow(2, follower = "2M"),
-      pinRow(3, follower = "854"),
-      pinRow(4, follower = "User Info Error"))))
-    val got = df.select("index", "follower_count").as[(Long, Option[Int])]
-      .collect().toMap
-    assert(got(1L).contains(25500))
-    assert(got(2L).contains(2000000))
-    assert(got(3L).contains(854))
-    assert(got(4L).isEmpty)
+    assert(got(5L).isEmpty, "the 25.5k edge must null out (parity)")
   }
 
   test("LIKE null-outs hit garbage and spare look-alikes") {
@@ -124,18 +110,6 @@ class CleanSpec extends SparkSpec {
     val df = Seq(("", "keep"), ("  ", "also keep"), ("x", "")).toDF("a", "b")
     val out = Clean.emptyToNull(df).as[(Option[String], Option[String])].collect().toSet
     assert(out == Set((None, Some("keep")), (None, Some("also keep")), (Some("x"), None)))
-  }
-
-  test("typed Dataset surface round-trips the cleaned shapes") {
-    val pinDs = Clean.pinTyped(rawPin(Seq(pinRow(1, follower = "25k"))))
-    val p = pinDs.head()
-    assert(p.ind == 1L && p.follower_count.contains(25000))
-    val geoDs = Clean.geoTyped(spark.read.schema(Schemas.rawGeo).json(Seq(
-      """{"ind": 7, "timestamp": "2020-08-28 03:52:47", "latitude": -5.5, "longitude": 7.25, "country": "Albania"}""").toDS))
-    assert(geoDs.head().coordinates == Seq(-5.5, 7.25))
-    val userDs = Clean.userTyped(spark.read.schema(Schemas.rawUser).json(Seq(
-      """{"ind": 3, "first_name": "A", "last_name": "B", "age": 20, "date_joined": "2015-10-24 11:23:51"}""").toDS))
-    assert(userDs.head().user_name == "A B")
   }
 
   test("cleaning is idempotent where re-applicable") {

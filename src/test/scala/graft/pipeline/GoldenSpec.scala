@@ -1,7 +1,8 @@
 package graft.pipeline
 
 import graft.SparkSpec
-import graft.sources.{EmulatorGenerator, JsonSource}
+import graft.sources.{EmulatorGenerator, FileJsonTableSource}
+import graft.sources.PipelineTable.{Geo, Pin, User}
 import org.apache.spark.sql.DataFrame
 
 /** Golden-output tests (SURVEY §5.2 item 2): exact expected results for
@@ -17,9 +18,10 @@ class GoldenSpec extends SparkSpec {
     EmulatorGenerator.writeTopicLayout(dir, n = 400, seed = 42L)
     dir
   }
-  private lazy val pin: DataFrame = Clean.pin(JsonSource.readPin(spark, base.toString)).cache()
-  private lazy val geo: DataFrame = Clean.geo(JsonSource.readGeo(spark, base.toString)).cache()
-  private lazy val user: DataFrame = Clean.user(JsonSource.readUser(spark, base.toString)).cache()
+  private lazy val source = FileJsonTableSource(base.toString)
+  private lazy val pin: DataFrame = Clean.pin(source.readBatch(spark, Pin)).cache()
+  private lazy val geo: DataFrame = Clean.geo(source.readBatch(spark, Geo)).cache()
+  private lazy val user: DataFrame = Clean.user(source.readBatch(spark, User)).cache()
 
   test("golden task7: top category per age group, incl. NULL band") {
     val got = PinQueries.task7Df(pin, user)

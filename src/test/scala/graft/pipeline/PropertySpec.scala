@@ -22,7 +22,7 @@ class PropertySpec extends SparkSpec {
       Gen.numStr, Gen.alphaNumStr, Gen.asciiPrintableStr,
       Gen.oneOf("25k", "1M", "25.5k", "", "k", "M", "kk", "9" * 20, "-3k", "1e5"))
     val strings = samples(gen, 500, seed = 1L)
-    val out = Clean.expandFollowerCount()(strings.toDF("follower_count"))
+    val out = Clean.expandFollowerCount(strings.toDF("follower_count"))
       .as[Option[Int]].collect() // must never throw; int-or-null by schema
     assert(out.length == strings.size)
   }
@@ -36,7 +36,7 @@ class PropertySpec extends SparkSpec {
       case "k" => n.toLong * 1000L
       case "m" => n.toLong * 1000000L
     })
-    val got = Clean.expandFollowerCount()(cases.map(_._1).toDF("follower_count"))
+    val got = Clean.expandFollowerCount(cases.map(_._1).toDF("follower_count"))
       .as[Option[Long]].collect()
     got.zip(cases.map(_._2)).foreach { case (g, e) => assert(g.contains(e)) }
   }

@@ -2,7 +2,8 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.pipeline.{Clean, Schemas}
-import graft.sources.EmulatorGenerator
+import graft.sources.{EmulatorGenerator, FileJsonTableSource, KafkaTableSource, PipelineTable}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -28,7 +29,7 @@ class StreamPipelineSpec extends SparkSpec {
     val mem = MemoryStream[String]
     mem.addData(lines: _*)
     val cleaned = StreamPipeline.cleanPinStream(
-      StreamPipeline.deserialize(mem.toDF.withColumnRenamed("value", "value"), Schemas.rawPin))
+      KafkaTableSource.decode(mem.toDF, Schemas.rawPin))
     val q = StreamPipeline.writeStream(cleaned, out, "pin_stream")
     q.awaitTermination(60000)
 
@@ -47,7 +48,7 @@ class StreamPipelineSpec extends SparkSpec {
     mem1.addData(first: _*)
     val q1 = StreamPipeline.writeStream(
       StreamPipeline.cleanPinStream(
-        StreamPipeline.deserialize(mem1.toDF, Schemas.rawPin)),
+        KafkaTableSource.decode(mem1.toDF, Schemas.rawPin)),
       out, "pin_rec")
     q1.awaitTermination(60000)
     assert(spark.read.parquet(s"$out/data/pin_rec").count() == 50)
@@ -59,7 +60,7 @@ class StreamPipelineSpec extends SparkSpec {
     mem2.addData(second: _*)
     val q2 = StreamPipeline.writeStream(
       StreamPipeline.cleanPinStream(
-        StreamPipeline.deserialize(mem2.toDF, Schemas.rawPin)),
+        KafkaTableSource.decode(mem2.toDF, Schemas.rawPin)),
       out, "pin_rec")
     q2.awaitTermination(60000)
     val total = spark.read.parquet(s"$out/data/pin_rec").count()
@@ -79,50 +80,8 @@ class StreamPipelineSpec extends SparkSpec {
     q.awaitTermination(60000)
     val streamed = spark.read.parquet(s"$out/data/pin_files")
     val batch = Clean.pin(
-      graft.sources.JsonSource.readPin(spark, base.toString))
+      FileJsonTableSource(base.toString).readBatch(spark, PipelineTable.Pin))
     assertSameRows(streamed, batch, "file-stream vs batch")
-  }
-
-  test("stateful streaming dedup drops replayed content (flatMapGroupsWithState)") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[String]
-    val a = """{"x": 1}"""
-    val b = """{"x": 2}"""
-    mem.addData(a, b, a, a, b) // replays of the same payloads
-    val keyed = mem.toDS().map(s => (s.hashCode.toLong, s))
-    val deduped = StreamPipeline.dedupStream(keyed)
-    val q = deduped.writeStream.queryName("dedup_out")
-      .format("memory").outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    val got = spark.table("dedup_out").as[(Long, String)].collect().toSeq
-    assert(got.map(_._2).sorted == Seq(a, b).sorted,
-      s"each payload exactly once, got $got")
-  }
-
-  test("watermarked event-time window counts (extension ST6)") {
-    implicit val sqlCtx = spark.sqlContext
-    val geoLines = Seq(
-      """{"ind": 1, "timestamp": "2021-03-01 10:00:00", "latitude": 1.0, "longitude": 2.0, "country": "Albania"}""",
-      """{"ind": 2, "timestamp": "2021-03-01 23:59:59", "latitude": 1.0, "longitude": 2.0, "country": "Albania"}""",
-      """{"ind": 3, "timestamp": "2021-03-02 00:00:01", "latitude": 1.0, "longitude": 2.0, "country": "Albania"}""",
-      """{"ind": 4, "timestamp": "2021-03-01 12:00:00", "latitude": 1.0, "longitude": 2.0, "country": "Japan"}""")
-    val mem = MemoryStream[String]
-    mem.addData(geoLines: _*)
-    val cleaned = StreamPipeline.cleanGeoStream(
-      StreamPipeline.deserialize(mem.toDF, Schemas.rawGeo))
-    val windowed = StreamPipeline.windowedCountryCounts(cleaned)
-    val q = windowed.writeStream.queryName("geo_windows")
-      .format("memory").outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    val got = spark.table("geo_windows")
-      .selectExpr("date_format(window.start, 'yyyy-MM-dd')", "country", "events")
-      .as[(String, String, Long)].collect().toSet
-    assert(got == Set(
-      ("2021-03-01", "Albania", 2L),
-      ("2021-03-02", "Albania", 1L),
-      ("2021-03-01", "Japan", 1L)))
   }
 
   test("three concurrent queries with per-query checkpoints") {
@@ -138,11 +97,11 @@ class StreamPipelineSpec extends SparkSpec {
 
     val qs = Seq(
       StreamPipeline.writeStream(StreamPipeline.cleanPinStream(
-        StreamPipeline.deserialize(pinMem.toDF, Schemas.rawPin)), out, "pin"),
+        KafkaTableSource.decode(pinMem.toDF, Schemas.rawPin)), out, "pin"),
       StreamPipeline.writeStream(StreamPipeline.cleanGeoStream(
-        StreamPipeline.deserialize(geoMem.toDF, Schemas.rawGeo)), out, "geo"),
+        KafkaTableSource.decode(geoMem.toDF, Schemas.rawGeo)), out, "geo"),
       StreamPipeline.writeStream(StreamPipeline.cleanUserStream(
-        StreamPipeline.deserialize(userMem.toDF, Schemas.rawUser)), out, "user"))
+        KafkaTableSource.decode(userMem.toDF, Schemas.rawUser)), out, "user"))
     qs.foreach(_.awaitTermination(60000))
 
     assert(spark.read.parquet(s"$out/data/pin").count() == 40)
@@ -153,156 +112,29 @@ class StreamPipelineSpec extends SparkSpec {
     assert(cps == Set("pin", "geo", "user"))
   }
 
-  test("dropDuplicatesWithinWatermark suppresses close replays with bounded state") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Long)] // (key, seconds)
-    // key 1 replayed twice within the window, key 2 once, key 3 distinct
-    mem.addData((1L, 1000L), (1L, 1010L), (2L, 1000L), (3L, 2000L), (1L, 1020L))
-    val events = mem.toDF.toDF("k", "s")
-      .withColumn("ts", timestamp_seconds(col("s")))
-    val q = StreamPipeline.dedupWithinWatermark(events, "ts", Seq("k"))
-      .select(col("k")).writeStream.queryName("wm_dedup_out")
-      .format("memory").outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val got = spark.table("wm_dedup_out").as[Long].collect().sorted.toSeq
-    assert(got == Seq(1L, 2L, 3L), s"each key exactly once within the window: $got")
-  }
-
-  test("stream-static dimension enrich is a per-batch broadcast join") {
-    implicit val sqlCtx = spark.sqlContext
-    val dim = Seq((1L, "US"), (2L, "DE")).toDF("user_id", "country")
-    val mem = MemoryStream[Long]
-    mem.addData(1L, 2L, 3L)
-    val enriched = StreamPipeline.enrichWithDim(
-      mem.toDF.withColumnRenamed("value", "user_id"), dim, "user_id")
-    val q = enriched.writeStream.queryName("enrich_out").format("memory")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val got = spark.table("enrich_out").as[(Long, Option[String])].collect().toSet
-    assert(got == Set((1L, Some("US")), (2L, Some("DE")), (3L, None)),
-      s"left enrich must keep unmatched stream rows: $got")
-  }
-
-  test("stream-stream interval join pairs events within the delay window") {
-    implicit val sqlCtx = spark.sqlContext
-    // purchases at minute 10 and 90; signups at minutes 0 and 85:
-    // with a 1h window, purchase@10 matches signup@0, purchase@90
-    // matches signup@85 (NOT signup@0 — 90min gap > 1h)
-    val purchases = MemoryStream[(Long, Long)]
-    val signups = MemoryStream[(Long, Long)]
-    purchases.addData((1L, 10L), (1L, 90L), (2L, 30L))
-    signups.addData((1L, 0L), (1L, 85L))
-    // keep event times well away from epoch 0: the initial watermark is
-    // clamped at 0, and an event exactly at the watermark is late-filtered
-    val base = 1000000L
-    def ts(df: org.apache.spark.sql.DataFrame, user: String, t: String) =
-      df.select(col("_1").as(user), timestamp_seconds(col("_2") * 60 + base).as(t))
-    // generous lateness: the two memory sources may land in different
-    // micro-batches, racing one side's watermark ahead of the other
-    val joined = StreamPipeline.streamIntervalJoin(
-      ts(purchases.toDF, "p_user", "p_ts"), ts(signups.toDF, "s_user", "s_ts"),
-      "p_user", "s_user", "p_ts", "s_ts",
-      matchWindow = "1 hour", lateness = Some("6 hours"))
-    val q = joined
-      .select(col("p_user"), unix_timestamp(col("p_ts")).as("p_s"),
-        unix_timestamp(col("s_ts")).as("s_s"))
-      .writeStream.queryName("ivj_out").format("memory")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val got = spark.table("ivj_out").as[(Long, Long, Long)].collect().toSet
-    assert(got == Set((1L, base + 600L, base + 0L), (1L, base + 5400L, base + 5100L)),
-      s"got $got")
-  }
-
-  test("streaming bloom decontamination == batch operator, incl. collision-heavy filter") {
-    implicit val sqlCtx = spark.sqlContext
-    val texts = (0L until 300L).map(i => (i, s"streamed document number $i payload"))
-    val block = (0L until 300L by 7).map(i => s"Streamed   DOCUMENT number $i PAYLOAD")
-      .toDF("text") // normalization must bridge the case/whitespace gap
-    val batchExpected = graft.operators.Dedup.decontaminate(
-      texts.toDF("doc_id", "text"), "text", block, "text")
-
-    def runStream(numBits: Long): org.apache.spark.sql.DataFrame = {
-      val mem = MemoryStream[(Long, String)]
-      mem.addData(texts: _*)
-      val name = s"decon_out_$numBits"
-      val q = StreamPipeline.decontaminateStream(
-        mem.toDF.toDF("doc_id", "text"), "text", block, "text",
-        expectedItems = 50L, numBits = numBits)
-        .writeStream.queryName(name).format("memory")
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      spark.table(name)
+  test("StreamMain.start drops all-null records, then lands batch Clean.* of the rest") {
+    // a record carrying only the key (cross-stream pollution, the
+    // reference's Kinesis_Processing.ipynb:848-849 guard) lands beside
+    // generator rows; the streaming job must drop it before cleaning
+    val base = java.nio.file.Files.createTempDirectory("graft-streammain")
+    EmulatorGenerator.writeTopicLayout(base, 60, seed = 29L)
+    java.nio.file.Files.writeString(
+      base.resolve("topics/pin/partition=0/polluted.json"), """{"index": 7}""" + "\n")
+    val out = java.nio.file.Files.createTempDirectory("graft-streammain-out").toString
+    graft.run.StreamMain.start(spark, base.toString, out,
+      org.apache.spark.sql.streaming.Trigger.AvailableNow()).foreach(_.awaitTermination())
+    val source = FileJsonTableSource(base.toString)
+    for ((t, key, clean) <- Seq[(PipelineTable, String, DataFrame => DataFrame)](
+        (PipelineTable.Pin, "index", Clean.pin),
+        (PipelineTable.Geo, "ind", Clean.geo),
+        (PipelineTable.User, "ind", Clean.user))) {
+      val raw = source.readBatch(spark, t)
+      val valid = raw.filter(raw.columns.filterNot(_ == key)
+        .map(col(_).isNotNull).reduce(_ || _))
+      assertSameRows(spark.read.parquet(s"$out/data/${t.name}"), clean(valid),
+        s"landed ${t.name} vs batch clean of the valid rows")
     }
-
-    // generous filter: bloom rejects most rows map-side
-    assertSameRows(runStream(1L << 20), batchExpected, "streaming vs batch decontamination")
-    // 64-bit filter: nearly every row is a bloom false positive — the
-    // stream-static anti join must carry correctness alone
-    assertSameRows(runStream(64L), batchExpected, "streaming exactness must not depend on fpp")
-  }
-
-  test("streaming session_window groups events by inactivity gap (ST6 extension)") {
-    implicit val sqlCtx = spark.sqlContext
-    // user 1: events at minutes 0, 10 (one session: gap < 30min), then 50
-    // (new session: 40min gap); user 2: a singleton
-    val mem = MemoryStream[(Long, Long)]
-    mem.addData((1L, 0L), (1L, 10L), (1L, 50L), (2L, 5L))
-    val events = mem.toDF.toDF("user_id", "mins")
-      .withColumn("ts", timestamp_seconds(col("mins") * 60))
-    val q = StreamPipeline.sessionizedCounts(events, "ts", "user_id")
-      .writeStream.queryName("sess_out").format("memory")
-      .outputMode("complete").start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("sess_out")
-        .select(col("user_id"), col("n_events"),
-          unix_timestamp(col("session_start")).as("start_s"),
-          unix_timestamp(col("session_end")).as("end_s"))
-        .as[(Long, Long, Long, Long)].collect().toSet
-      // session end = last event + gap (30 min = 1800 s)
-      assert(got == Set(
-        (1L, 2L, 0L, 600L + 1800L),
-        (1L, 1L, 3000L, 3000L + 1800L),
-        (2L, 1L, 300L, 300L + 1800L)), s"got $got")
-    } finally q.stop()
-  }
-
-  test("streaming MinHash candidates across micro-batches == batch candidate set") {
-    implicit val sqlCtx = spark.sqlContext
-    // near-dup family split ACROSS micro-batches (the case a nightly
-    // batch job can't flag until the next run) + unrelated docs
-    val batch1 = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog near the river bank"),
-      (10L, "completely unrelated text about distributed query engines and shuffles"))
-    val batch2 = Seq(
-      (2L, "the quick brown fox jumps over the lazy dog near the river bend"),
-      (3L, "the quick brown fox jumps over the lazy dog near the river bank"),
-      (11L, "another unrelated document mentioning parquet row groups only"))
-    val mem = MemoryStream[(Long, String)]
-    val q = StreamPipeline.minhashCandidatesStream(
-        mem.toDF.toDF("doc_id", "text"), "doc_id", "text")
-      .writeStream.queryName("mh_cand").format("memory")
-      .outputMode("append").start()
-    try {
-      mem.addData(batch1: _*); q.processAllAvailable()
-      mem.addData(batch2: _*); q.processAllAvailable()
-      val streamed = spark.table("mh_cand")
-        .as[(Long, Long)].collect().toSet
-      // batch reference: same banded candidates (threshold 0 keeps every
-      // bucket-colliding pair)
-      val all = (batch1 ++ batch2).toDF("doc_id", "text")
-      val expected = graft.operators.Dedup.minhashCandidatePairs(
-          all, "doc_id", "text", threshold = 0.0)
-        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-      assert(streamed == expected,
-        s"stream=$streamed expected=$expected")
-      // the near-dup family must actually be in there
-      assert(streamed.contains((1L, 2L)) && streamed.contains((1L, 3L)))
-    } finally q.stop()
+    assert(spark.read.parquet(s"$out/data/pin").count() == 60)
   }
 
   test("index-backed streaming dedup: cross-batch dups drop, state survives in parquet") {
@@ -481,121 +313,6 @@ class StreamPipelineSpec extends SparkSpec {
     assert(g2(400L) == "quarantined", s"successor of a quarantined doc: $g2")
   }
 
-  test("streaming image dedup: near-dup payloads drop within and across batches; replay skips") {
-    import graft.operators.Multimodal
-    val out = java.nio.file.Files.createTempDirectory("graft-img-out").toString + "/out"
-    val idx = java.nio.file.Files.createTempDirectory("graft-img-idx").toString + "/index"
-    // real PNG payloads from the near-dup fixture: ids 0,1 are the same
-    // group (hamming <= 2), id 2 is group 0 again, ids 10,11 group 2
-    def imagesOf(ids: Long*) = Multimodal.synthesizeNearDupImages(
-      ids.toDF("doc_id"), "doc_id")
-    // batch 0: base + near-copy of group 0 → keeper 0 only
-    StreamPipeline.dhashIndexBatch(imagesOf(0L, 1L), 0L, "doc_id", out, idx, 3)
-    // batch 1: ANOTHER group-0 member (must drop via the index) + a
-    // fresh group pair (keeper 10)
-    StreamPipeline.dhashIndexBatch(imagesOf(2L, 10L, 11L), 1L, "doc_id", out, idx, 3)
-    def survivors() = spark.read.parquet(out).select("doc_id").as[Long].collect().toSet
-    assert(survivors() == Set(0L, 10L), s"got ${survivors()}")
-    // at-least-once redelivery of batch 1 is a no-op on the markers
-    StreamPipeline.dhashIndexBatch(imagesOf(2L, 10L, 11L), 1L, "doc_id", out, idx, 3)
-    assert(survivors() == Set(0L, 10L), "replay must not change survivors")
-    assert(IndexState.read(spark, idx, "h BIGINT").select("h").count() == 2,
-      "index holds exactly the survivors' signatures")
-    // a later duplicate of a batch-0 survivor still drops (shared state)
-    StreamPipeline.dhashIndexBatch(imagesOf(3L, 20L), 2L, "doc_id", out, idx, 3)
-    assert(survivors() == Set(0L, 10L, 20L), s"got ${survivors()}")
-  }
-
-  test("streaming perceptual dedup is modality-agnostic: video payloads through the same machinery") {
-    import graft.operators.Multimodal
-    val out = java.nio.file.Files.createTempDirectory("graft-vid-out").toString + "/out"
-    val idx = java.nio.file.Files.createTempDirectory("graft-vid-idx").toString + "/index"
-    // genuine y4m payloads from the q162 fixture; only the hasher swaps
-    def vidsOf(ids: Long*) = Multimodal.synthesizeNearDupY4m(
-      ids.toDF("doc_id"), "doc_id")
-    val hasher = Multimodal.videoDHashY4m _
-    StreamPipeline.dhashIndexBatch(vidsOf(0L, 1L), 0L, "doc_id", out, idx, 3, hasher)
-    StreamPipeline.dhashIndexBatch(vidsOf(2L, 10L, 11L), 1L, "doc_id", out, idx, 3, hasher)
-    def survivors() = spark.read.parquet(out).select("doc_id").as[Long].collect().toSet
-    assert(survivors() == Set(0L, 10L), s"got ${survivors()}")
-    // replay no-op + shared-state drop, as in the image twin
-    StreamPipeline.dhashIndexBatch(vidsOf(2L, 10L, 11L), 1L, "doc_id", out, idx, 3, hasher)
-    assert(survivors() == Set(0L, 10L), "replay must not change survivors")
-    StreamPipeline.dhashIndexBatch(vidsOf(3L, 20L), 2L, "doc_id", out, idx, 3, hasher)
-    assert(survivors() == Set(0L, 10L, 20L), s"got ${survivors()}")
-  }
-
-  test("streaming DSIR model: partial fold == full recompute; replay skips") {
-    import graft.operators.CorpusPrep
-    val state = java.nio.file.Files.createTempDirectory("graft-dsir-state").toString + "/s"
-    def docsOf(rows: (Long, String, Boolean)*) = rows.toDF("doc_id", "text", "tgt")
-    val b0 = docsOf((1L, "alpha beta gamma", true), (2L, "delta epsilon", false))
-    val b1 = docsOf((3L, "alpha beta beta", true), (4L, "beta gamma delta", false))
-    val b2 = docsOf((5L, "gamma gamma alpha beta", false))
-    val B = 16
-    StreamPipeline.dsirStatsBatch(b0, 0L, "doc_id", "text", col("tgt"), state, B)
-    StreamPipeline.dsirStatsBatch(b1, 1L, "doc_id", "text", col("tgt"), state, B)
-    // replayed batch must be a marker no-op
-    StreamPipeline.dsirStatsBatch(b1, 1L, "doc_id", "text", col("tgt"), state, B)
-    StreamPipeline.dsirStatsBatch(b2, 2L, "doc_id", "text", col("tgt"), state, B)
-    val all = b0.unionByName(b1).unionByName(b2)
-    val feats = CorpusPrep.dsirFeatures(all, "doc_id", "text", col("tgt"), B)
-    val lamBatch = CorpusPrep.dsirLambda(CorpusPrep.dsirBucketStats(feats), B)
-      .as[(Long, Long)].collect().toSet
-    val lamStream = StreamPipeline.currentDsirLambda(spark, state, B).get
-      .as[(Long, Long)].collect().toSet
-    assert(lamStream == lamBatch, s"fold != recompute:\n$lamStream\n$lamBatch")
-    // and scoring against the folded model == the one-shot weights
-    val wStream = CorpusPrep.dsirScore(feats,
-        StreamPipeline.currentDsirLambda(spark, state, B).get)
-      .as[(Long, Long, Long)].collect().toSet
-    val wBatch = CorpusPrep.dsirWeights(all, "doc_id", "text", col("tgt"), B)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(wStream == wBatch)
-  }
-
-  test("streaming index maintenance: partial fold == full recompute; replay skips") {
-    val state = java.nio.file.Files.createTempDirectory("graft-idx-state").toString + "/s"
-    def docsOf(rows: (Long, String)*) = rows.toDF("doc_id", "text")
-    val b0 = docsOf(1L -> "the quick fox", 2L -> "lazy dog dog")
-    val b1 = docsOf(3L -> "the the the quick", 4L -> "fox")
-    StreamPipeline.postingsIndexBatch(b0, 0L, "doc_id", "text", state)
-    StreamPipeline.postingsIndexBatch(b1, 1L, "doc_id", "text", state)
-    // replayed batch must be a marker no-op
-    StreamPipeline.postingsIndexBatch(b1, 1L, "doc_id", "text", state)
-    val got = StreamPipeline.currentIndexStats(spark, state).get
-      .as[(String, Long, Long, Long)].collect().toSet
-    val full = graft.operators.Search.indexStats(
-        b0.unionByName(b1), "doc_id", "text")
-      .as[(String, Long, Long, Long)].collect().toSet
-    assert(got == full, s"fold != recompute:\n$got\n$full")
-    // spot-check the non-additive measure: max_tf is a max, not a sum
-    assert(got.collect { case ("the", df, cf, mx) => (df, cf, mx) }.head == ((2L, 4L, 3L)))
-  }
-
-  test("capped bucket stars to the RUNNING min id, not the min of the first cap") {
-    implicit val sqlCtx = spark.sqlContext
-    // identical texts collide in every band bucket; cap=2 fills on the
-    // first batch. A smaller id arriving AFTER the cap must (a) pair
-    // with the current representative and (b) BECOME the representative
-    // for later arrivals — the r6 state (member list only) froze the
-    // rep at min(first cap arrivals), so id 1 would pair with 5, not 2.
-    val text = "the quick brown fox jumps over the lazy dog near the river bank"
-    val mem = MemoryStream[(Long, String)]
-    val q = StreamPipeline.minhashCandidatesStream(
-        mem.toDF.toDF("doc_id", "text"), "doc_id", "text", bucketCap = 2)
-      .writeStream.queryName("mh_capped").format("memory")
-      .outputMode("append").start()
-    try {
-      mem.addData((5L, text), (6L, text)); q.processAllAvailable()
-      mem.addData((2L, text)); q.processAllAvailable()
-      mem.addData((1L, text)); q.processAllAvailable()
-      val pairs = spark.table("mh_capped").as[(Long, Long)].collect().toSet
-      assert(pairs == Set((5L, 6L), (2L, 5L), (1L, 2L)),
-        s"got $pairs — (1,2) proves the rep advanced to the running min")
-    } finally q.stop()
-  }
-
   test("filter-funnel cascade runs unchanged on a stream (stream == batch)") {
     import graft.functions.{TextFunctions => T}
     implicit val sqlCtx = spark.sqlContext
@@ -661,166 +378,6 @@ class StreamPipelineSpec extends SparkSpec {
       assertSameRows(spark.table("fused_sig"),
         signals(data.toDF("doc_id", "text")), "fused signals stream vs batch")
     } finally q.stop()
-  }
-
-  // ---- streaming gap-fill interpolation (q128's twin) ----
-
-  private def eventsDF(rows: (Long, String, Double, String)*) =
-    rows.toDF("user_id", "ts", "value", "event_type")
-      .withColumn("ts", to_timestamp(col("ts")))
-
-  private def batchAnswer(all: org.apache.spark.sql.DataFrame) =
-    graft.operators.GapFill.interpolateDaily(
-      graft.operators.GapFill.dailyPurchases(all))
-
-  test("streaming gap-fill interpolation == batch over micro-batch splits") {
-    implicit val sqlCtx = spark.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("graft-gap-out").toString + "/out"
-    val st = java.nio.file.Files.createTempDirectory("graft-gap-st").toString + "/state"
-    // u1's gap neighbors arrive two batches apart; u1 day1 gets a
-    // second contribution in batch 2 (state must SUM across batches);
-    // the view event must be filtered out
-    val b0 = Seq((1L, "2024-01-01 10:00:00", 10.0, "purchase"),
-      (1L, "2024-01-04 09:00:00", 16.0, "purchase"),
-      (3L, "2024-01-02 12:00:00", 5.0, "purchase"),
-      (3L, "2024-01-02 13:00:00", 99.0, "view"))
-    val b1 = Seq((2L, "2024-01-10 08:00:00", 3.0, "purchase"),
-      (3L, "2024-01-05 18:00:00", 7.0, "purchase"))
-    val b2 = Seq((1L, "2024-01-06 11:00:00", 1.0, "purchase"),
-      (1L, "2024-01-01 23:00:00", 2.5, "purchase"))
-    val mem = MemoryStream[(Long, String, Double, String)]
-    val q = StreamPipeline.interpolateDailyStream(
-      mem.toDF.toDF("user_id", "ts", "value", "event_type")
-        .withColumn("ts", to_timestamp(col("ts"))), st, out)
-    try {
-      mem.addData(b0: _*); q.processAllAvailable()
-      mem.addData(b1: _*); q.processAllAvailable()
-      mem.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
-    assertSameRows(
-      StreamPipeline.latestSeries(spark, out),
-      batchAnswer(eventsDF(b0 ++ b1 ++ b2: _*)),
-      "streamed interpolation vs one-shot batch")
-  }
-
-  test("gap-fill replay (foreachBatch redelivery) changes nothing") {
-    val out = java.nio.file.Files.createTempDirectory("graft-gapr-out").toString + "/out"
-    val st = java.nio.file.Files.createTempDirectory("graft-gapr-st").toString + "/state"
-    val b0 = Seq((1L, "2024-01-01 10:00:00", 10.0, "purchase"),
-      (1L, "2024-01-03 09:00:00", 4.0, "purchase"))
-    val b1 = Seq((1L, "2024-01-05 09:00:00", 6.0, "purchase"),
-      (2L, "2024-01-02 10:00:00", 8.0, "purchase"))
-    StreamPipeline.interpolateDailyBatch(eventsDF(b0: _*), 0L, st, out)
-    StreamPipeline.interpolateDailyBatch(eventsDF(b1: _*), 1L, st, out)
-    val before = StreamPipeline.latestSeries(spark, out).collect().toSet
-    StreamPipeline.interpolateDailyBatch(eventsDF(b1: _*), 1L, st, out) // redelivery
-    assert(StreamPipeline.latestSeries(spark, out).collect().toSet == before,
-      "replayed batch must be a no-op on both state and output")
-    assertSameRows(StreamPipeline.latestSeries(spark, out),
-      batchAnswer(eventsDF(b0 ++ b1: _*)), "post-replay parity")
-  }
-
-  test("crash between state commit and output write heals on redelivery") {
-    val out = java.nio.file.Files.createTempDirectory("graft-gapc-out").toString + "/out"
-    val st = java.nio.file.Files.createTempDirectory("graft-gapc-st").toString + "/state"
-    val b0 = Seq((1L, "2024-01-01 10:00:00", 10.0, "purchase"),
-      (1L, "2024-01-04 09:00:00", 16.0, "purchase"))
-    val b1 = Seq((1L, "2024-01-06 11:00:00", 1.0, "purchase"))
-    StreamPipeline.interpolateDailyBatch(eventsDF(b0: _*), 0L, st, out)
-    StreamPipeline.interpolateDailyBatch(eventsDF(b1: _*), 1L, st, out)
-    // crash model: state batch=1 committed, output batch=1 torn
-    val marker = new java.io.File(s"$out/batch=1/_SUCCESS")
-    assert(marker.exists() && marker.delete())
-    StreamPipeline.interpolateDailyBatch(eventsDF(b1: _*), 1L, st, out) // redelivery
-    assertSameRows(StreamPipeline.latestSeries(spark, out),
-      batchAnswer(eventsDF(b0 ++ b1: _*)),
-      "healed output must equal the batch answer (series spans day 1..6)")
-  }
-
-  // ---- streaming per-domain cap (q135's twin) ----
-
-  private def urlDocs(ids: Seq[Long]) = ids.map { i =>
-    val host = if (i % 3 == 0) "www.big.com" else s"site${i % 4}.co.uk"
-    (i, s"https://$host/p/$i")
-  }.toDF("doc_id", "url")
-
-  test("streaming domain cap == batch cap regardless of batch boundaries") {
-    val st = java.nio.file.Files.createTempDirectory("graft-cap-st").toString + "/state"
-    val all = (1L to 120L)
-    val splits = Seq(all.slice(0, 40), all.slice(40, 90), all.slice(90, 120))
-    splits.zipWithIndex.foreach { case (ids, bi) =>
-      StreamPipeline.domainCapBatch(urlDocs(ids), bi.toLong, "url", "doc_id", 5, st)
-    }
-    assertSameRows(
-      StreamPipeline.currentKept(spark, st, "doc_id"),
-      graft.operators.CorpusPrep.domainCap(urlDocs(all), "url", "doc_id", 5),
-      "incremental cap vs one-shot batch cap")
-    // arrival-order invariance: reversed batches give the same kept set
-    val st2 = java.nio.file.Files.createTempDirectory("graft-cap-st2").toString + "/state"
-    splits.reverse.zipWithIndex.foreach { case (ids, bi) =>
-      StreamPipeline.domainCapBatch(urlDocs(ids), bi.toLong, "url", "doc_id", 5, st2)
-    }
-    assertSameRows(
-      StreamPipeline.currentKept(spark, st2, "doc_id"),
-      StreamPipeline.currentKept(spark, st, "doc_id"),
-      "kept set must not depend on arrival order")
-  }
-
-  test("domain cap replay (foreachBatch redelivery) is a no-op") {
-    val st = java.nio.file.Files.createTempDirectory("graft-capr-st").toString + "/state"
-    StreamPipeline.domainCapBatch(urlDocs(1L to 50L), 0L, "url", "doc_id", 5, st)
-    StreamPipeline.domainCapBatch(urlDocs(51L to 80L), 1L, "url", "doc_id", 5, st)
-    val before = StreamPipeline.currentKept(spark, st, "doc_id").collect().toSet
-    StreamPipeline.domainCapBatch(urlDocs(51L to 80L), 1L, "url", "doc_id", 5, st)
-    assert(StreamPipeline.currentKept(spark, st, "doc_id").collect().toSet == before)
-  }
-
-  // (user, type, µs) fixture exercising every funnel edge: u1 converts;
-  // u2 signs up, never buys; u3's purchase lands BEFORE its signup in
-  // arrival order (out-of-order stream); u4 buys only before signup
-  // (never converts); u5 has no signup (never emitted); u6's later-
-  // arriving EARLIER signup retroactively qualifies a buffered purchase;
-  // u7's purchase ties its signup instant exactly (counts, us >= signup).
-  private val funnelEvents: Seq[(Long, String, Long)] = Seq(
-    (1L, "signup", 100L), (1L, "view", 150L), (1L, "purchase", 200L),
-    (1L, "purchase", 300L),
-    (2L, "signup", 100L),
-    (3L, "purchase", 500L), (3L, "signup", 400L),
-    (4L, "purchase", 50L), (4L, "signup", 90L),
-    (5L, "purchase", 10L), (5L, "view", 20L),
-    (6L, "signup", 500L), (6L, "purchase", 300L), (6L, "signup", 250L),
-    (7L, "signup", 700L), (7L, "purchase", 700L))
-
-  // the batch (q143 conv-table) answer on the same events
-  private val funnelExpected: Map[Long, (Long, Long)] = Map(
-    1L -> (100L, 200L), 2L -> (100L, -1L), 3L -> (400L, 500L),
-    4L -> (90L, -1L), 6L -> (250L, 300L), 7L -> (700L, 700L))
-
-  private def runFunnel(batches: Seq[Seq[(Long, String, Long)]],
-      name: String): Map[Long, (Long, Long)] = {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val mem = MemoryStream[(Long, String, Long)]
-    val q = StreamPipeline.funnelStream(mem.toDS())
-      .writeStream.queryName(name).format("memory")
-      .outputMode("append").start()
-    try batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-    finally q.stop()
-    // LATEST emission per user is the answer; memory sink appends in
-    // batch order, so fold keeps the last
-    spark.table(name).as[(Long, Long, Long)].collect()
-      .foldLeft(Map.empty[Long, (Long, Long)]) { case (m, (u, s, p)) =>
-        m.updated(u, (s, p))
-      }
-  }
-
-  test("streaming funnel: latest emission equals the batch conv table") {
-    assert(runFunnel(Seq(funnelEvents), "funnel_one") == funnelExpected)
-  }
-
-  test("streaming funnel: invariant under micro-batch splits incl. per-event") {
-    assert(runFunnel(funnelEvents.grouped(3).toSeq, "funnel_g3") == funnelExpected)
-    assert(runFunnel(funnelEvents.map(Seq(_)), "funnel_g1") == funnelExpected)
   }
 
   test("streaming rollup: committed partials re-sum to the one-shot aggregate") {
@@ -964,95 +521,6 @@ class StreamPipelineSpec extends SparkSpec {
       "replayed compacted batch still tombstoned after crash recovery")
   }
 
-  test("bounded funnel: watermark variant matches the unbounded answer") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String, Long)]
-    // generous lateness >> the event-time range: nothing is dropped, so
-    // bounded must equal the batch oracle exactly
-    val q = StreamPipeline.funnelStreamBounded(mem.toDS(), "1 hour")
-      .writeStream.queryName("funnel_wm").format("memory")
-      .outputMode("append").start()
-    try funnelEvents.grouped(4).foreach { b =>
-      mem.addData(b: _*); q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("funnel_wm").as[(Long, Long, Long)].collect()
-      .foldLeft(Map.empty[Long, (Long, Long)]) { case (m, (u, s, p)) =>
-        m.updated(u, (s, p))
-      }
-    assert(got == funnelExpected)
-  }
-
-  test("funnelAdvance: watermark prune never changes a claimable answer") {
-    val none = StreamPipeline.FunnelNone
-    val s0 = (none, none, List.empty[Long])
-    // purchases at 5, 15, 25 with no signup yet
-    val buffered = StreamPipeline.funnelAdvance(
-      s0, Seq(("purchase", 5L), ("purchase", 15L), ("purchase", 25L)), Long.MinValue)
-    assert(buffered._3.toSet == Set(5L, 15L, 25L))
-    // watermark at 20 prunes 5 and 15; by the watermark contract no
-    // future signup can carry s < 20, and a signup at s >= 20 can only
-    // claim purchases >= s >= 20 — so the prune is invisible
-    val pruned = StreamPipeline.funnelAdvance(buffered, Seq.empty, 20L)
-    assert(pruned._3 == List(25L))
-    val afterSignup = StreamPipeline.funnelAdvance(pruned, Seq(("signup", 22L)), 20L)
-    val unprunedAfterSignup = StreamPipeline.funnelAdvance(buffered, Seq(("signup", 22L)), Long.MinValue)
-    assert((afterSignup._1, afterSignup._2) == (unprunedAfterSignup._1, unprunedAfterSignup._2),
-      "claimed (signup, purchase) pair must be identical with and without the prune")
-    assert(afterSignup._1 == 22L && afterSignup._2 == 25L)
-  }
-
-  test("streaming funnel: random event streams match the brute-force oracle") {
-    val r = new scala.util.Random(42)
-    val types = Seq("signup", "purchase", "view")
-    // timestamps from a SMALL range so signup/purchase ties and
-    // out-of-order arrivals are common, plus duplicate instants
-    val events = Seq.fill(300)(
-      (r.nextInt(20).toLong, types(r.nextInt(3)), r.nextInt(40).toLong))
-    def oracle(evs: Seq[(Long, String, Long)]): Map[Long, (Long, Long)] =
-      evs.groupBy(_._1).flatMap { case (u, es) =>
-        val signups = es.collect { case (_, "signup", t) => t }
-        if (signups.isEmpty) None
-        else {
-          val s = signups.min
-          val purch = es.collect { case (_, "purchase", t) if t >= s => t }
-          Some(u -> (s, if (purch.isEmpty) -1L else purch.min))
-        }
-      }
-    val expected = oracle(events)
-    // arbitrary batch split (sizes 1..15), arrival order AS GENERATED
-    // (i.e. random relative to event time)
-    def splits(evs: Seq[(Long, String, Long)]): Seq[Seq[(Long, String, Long)]] =
-      if (evs.isEmpty) Nil
-      else {
-        val k = 1 + r.nextInt(15)
-        evs.take(k) +: splits(evs.drop(k))
-      }
-    assert(runFunnel(splits(events), "funnel_rand") == expected)
-    assert(runFunnel(Seq(events), "funnel_rand1") == expected)
-  }
-
-  test("bounded streaming dedup: emissions match the unbounded variant within the watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    def ts(m: Int) = java.sql.Timestamp.valueOf(f"2021-03-01 10:$m%02d:00")
-    // payloads replayed across batches, all within a generous watermark
-    // window — the bounded variant must emit exactly what dedupStream
-    // emits: each hash once, first arrival
-    val rows = Seq(
-      (1L, ts(0), "a"), (2L, ts(1), "b"), (1L, ts(2), "a"),
-      (3L, ts(3), "c"), (2L, ts(9), "b"), (1L, ts(10), "a"))
-    val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
-    mem.addData(rows.take(3): _*)
-    mem.addData(rows.drop(3): _*)
-    val q = StreamPipeline.dedupStreamBounded(mem.toDS(), "1 hour")
-      .writeStream.queryName("dedup_bounded_out")
-      .format("memory").outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    val got = spark.table("dedup_bounded_out").as[(Long, String)].collect().toSeq
-    assert(got.sorted == Seq((1L, "a"), (2L, "b"), (3L, "c")),
-      s"each hash exactly once within the watermark, got $got")
-  }
-
   test("chaos: concurrent writers, replays and compactor — rollup stays exactly-once") {
     import graft.operators.Rollup
     import scala.concurrent.{Await, Future}
@@ -1145,36 +613,4 @@ class StreamPipelineSpec extends SparkSpec {
       s"lost-batch fold must fail loudly, got: ${e.getMessage}")
   }
 
-  test("streaming margin mining: per-batch == batch operator, replay skips") {
-    // the margin definition is batch-relative by construction (the
-    // batch IS the bounded side), so the streamed landing must equal
-    // the batch operator applied per batch — and a replayed batch
-    // must skip on its _SUCCESS marker, not double its pairs
-    val corpus = Seq(
-      (1L, Array(1000L, 0L, 0L)), (3L, Array(0L, 1000L, 0L)),
-      (5L, Array(0L, 0L, 1000L)), (7L, Array(700L, 700L, 0L)))
-      .toDF("vec_id", "qv")
-    val b0 = Seq(
-      (100L, Array(990L, 10L, 0L)), (102L, Array(0L, 995L, 5L)))
-      .toDF("vec_id", "qv")
-    val b1 = Seq((104L, Array(5L, 0L, 998L))).toDF("vec_id", "qv")
-    val out = java.nio.file.Files.createTempDirectory("graft-mm").toString + "/pairs"
-    StreamPipeline.marginMineBatch(b0, 0L, "vec_id", "qv", corpus, "vec_id", out)
-    StreamPipeline.marginMineBatch(b1, 1L, "vec_id", "qv", corpus, "vec_id", out)
-    val committed = IdempotentSink.committedDirs(spark, out)
-    val streamed = spark.read.parquet(committed: _*)
-    val expected = graft.operators.Similarity
-      .marginMine(corpus, "vec_id", b0, "vec_id", "qv")
-      .unionByName(graft.operators.Similarity
-        .marginMine(corpus, "vec_id", b1, "vec_id", "qv"))
-    assertSameRows(streamed, expected, "streamed landing vs per-batch operator")
-    // planted mutual pairs actually surface
-    val got = streamed.select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(got == Set((100L, 1L), (102L, 3L), (104L, 5L)), s"pairs: $got")
-    // at-least-once redelivery: same batch id, no growth
-    StreamPipeline.marginMineBatch(b1, 1L, "vec_id", "qv", corpus, "vec_id", out)
-    val after = spark.read.parquet(
-      IdempotentSink.committedDirs(spark, out): _*)
-    assert(after.count() == streamed.count(), "replayed batch must skip")
-  }
 }
